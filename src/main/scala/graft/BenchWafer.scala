@@ -1,25 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev profiling main for the wafer pipeline stages. */
 object BenchWafer {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     def time[T](n: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"[stage] $n: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
     }
     val n = args.headOption.map(_.toLong).getOrElse(63909L)
     val exact = !args.contains("approx")
-    val in = wafer.WaferDataGen.generate(spark, n, parts = cpus.toInt * 4).cache()
+    val in = wafer.WaferDataGen.generate(spark, n, parts = Session.cpus * 4).cache()
     in.count()
     val o = time("outlier")(wafer.WaferPipeline.removeOutliersByClass(in, exact = exact))
     time("outlier-materialize")(o.count())

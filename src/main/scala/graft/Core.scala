@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -44,6 +45,12 @@ object Tables {
     } else {
       spark.read.parquet(s"$dir/$name.parquet")
     }
+
+  /** The embeddings frame with its float array widened to `vec:
+    * array<double>` (the element type the vector operators take).
+    */
+  def embDouble(df: DataFrame): DataFrame =
+    df.withColumn("vec", expr("transform(embedding, x -> cast(x as double))"))
 
   /** Bring `ts` to session-zoned TimestampType regardless of how the
     * harness parquet encoded it (long nanos / TIMESTAMP_NTZ / already
@@ -93,17 +100,6 @@ object Tables {
   }
 }
 
-/** Numeric helpers shared by the query catalog.
-  *
-  * Floating-point sums are order-dependent, and Spark's shuffle order is
-  * nondeterministic — a plain sum(double) can differ in its last bits
-  * between runs and between engines, which breaks hash-comparison against
-  * the DuckDB oracle. `dsum` sums through an exact DECIMAL, then casts the
-  * exact result back to double: bit-identical in any execution order and
-  * in any engine. This is also the right call at 100 TB — decimal partial
-  * aggregates stay in Tungsten codegen and cost ~nothing relative to the
-  * shuffle they ride on.
-  */
 /** Session-level entry point for interactive / SQL-first use: register
   * every harness table as a temp view (so the entire engine surface is
   * reachable from `spark.sql`), with the GraftExtensions-injected
@@ -301,19 +297,16 @@ object Stage {
     * generations are swept.
     */
   def sweepSiblings(parent: String, prefix: String, keep: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
     // Two hardenings against concurrent runs straddling a dataset
     // regeneration (round-11 advisory):
     //  - skip dirs touched in the last 30 min: a sibling process'
     //    LIVE staging (it was created/written recently; reads don't
     //    bump mtime, but a generation old enough to be stale is hours
     //    old) must not be evicted mid-measurement;
-    //  - delete the completion markers FIRST: rm ignores per-file
-    //    delete failures, so a partially-swept dir could otherwise
-    //    survive WITH its _STAGED/_DONE marker and be trusted as a
-    //    complete artifact on the next run.
+    //  - delete the completion markers FIRST: deleteQuietly ignores
+    //    per-file delete failures, so a partially-swept dir could
+    //    otherwise survive WITH its _STAGED/_DONE marker and be trusted
+    //    as a complete artifact on the next run.
     val recentMs = 30L * 60 * 1000
     val now = System.currentTimeMillis()
     // liveness must look at the WHOLE tree, not the top-level dir: a
@@ -334,7 +327,7 @@ object Stage {
           .map(new java.io.File(f, _)).filter(_.exists())
         // only recurse once every marker is verifiably gone; a dir
         // whose marker cannot be deleted is left fully intact
-        if (markers.forall(_.delete())) rm(f)
+        if (markers.forall(_.delete())) FileUtils.deleteQuietly(f)
       }
     })
   }
@@ -362,6 +355,17 @@ object Stage {
   }
 }
 
+/** Numeric helpers shared by the query catalog.
+  *
+  * Floating-point sums are order-dependent, and Spark's shuffle order is
+  * nondeterministic — a plain sum(double) can differ in its last bits
+  * between runs and between engines, which breaks hash-comparison against
+  * the DuckDB oracle. `dsum` sums through an exact DECIMAL, then casts the
+  * exact result back to double: bit-identical in any execution order and
+  * in any engine. This is also the right call at 100 TB — decimal partial
+  * aggregates stay in Tungsten codegen and cost ~nothing relative to the
+  * shuffle they ride on.
+  */
 object Num {
   /** Order-independent double sum: cast each term to DECIMAL(28,6), sum
     * exactly, cast back. SQL mirror: CAST(SUM(CAST(x AS DECIMAL(28,6))) AS DOUBLE).
@@ -374,4 +378,23 @@ object Num {
   /** SQL fragments mirroring dsum/davg for DuckDB oracle strings. */
   def dsumSql(x: String): String = s"CAST(SUM(CAST(($x) AS DECIMAL(28,6))) AS DOUBLE)"
   def davgSql(x: String): String = s"(${dsumSql(x)} / COUNT($x))"
+
+  /** Sign-safe half-up integer division s/n (n > 0) as a SQL fragment,
+    * one per dialect. Both divisions see only non-negative operands, so
+    * the result is the same whether the dialect's integer division
+    * truncates or floors.
+    */
+  def halfUpSpark(s0: String, n: String): String =
+    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) div (2 * $n))
+        ELSE (2 * ($s0) + $n) div (2 * $n) END"""
+  def halfUpDuck(s0: String, n: String): String =
+    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) // (2 * $n))
+        ELSE (2 * ($s0) + $n) // (2 * $n) END"""
+
+  /** Half-up rounding to 6 decimals of a driver-side double (through its
+    * shortest decimal string, as SQL round() does).
+    */
+  def round6(x: Double): Double =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 }

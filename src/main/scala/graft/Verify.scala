@@ -1,4 +1,5 @@
 package graft
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -16,14 +17,7 @@ object Verify {
     val only = args.lift(2).map(_.split(',').toSeq)
     only.foreach(p =>
       System.err.println(s"[verify] PARTIAL dump (dev filter): ${p.mkString(",")}"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     run(spark, sfDir, outDir, only)
     spark.stop()
   }
@@ -43,10 +37,7 @@ object Verify {
         // error) would leave a PRIOR run's dump in place — the oracle
         // compare would then hash stale results and report a false
         // pass; a failed query must have NO result directory
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(s"$outDir/$name"))
+        FileUtils.deleteQuietly(new java.io.File(s"$outDir/$name"))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.PlanApi
 import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -57,18 +57,12 @@ case class BloomMightContain(
 }
 
 object BloomMightContain {
-  private val ctr = new java.util.concurrent.atomic.AtomicLong()
-
   /** Column probing `bfB` membership of `hash` (a LONG column). The
-    * expression is routed through a uniquely-named session temp
-    * function (the registry is how graft expressions reach the Column
-    * API — graft_cosine discipline; the unique name keeps concurrent
-    * query builds from rebinding each other's filter).
+    * expression goes straight into the Column, so building the probe
+    * registers nothing in the session: concurrent query builds cannot
+    * rebind each other's filter, and repeated executions leave the
+    * function registry as they found it.
     */
-  def column(spark: SparkSession, bfB: Broadcast[BloomFilter], hash: Column): Column = {
-    val name = s"graft_might_contain_${ctr.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BloomMightContain(bfB, exprs.head), "built-in")
-    call_function(name, hash)
-  }
+  def column(bfB: Broadcast[BloomFilter], hash: Column): Column =
+    PlanApi.column(BloomMightContain(bfB, PlanApi.expression(hash)))
 }

@@ -182,7 +182,7 @@ object Graphs {
       // bridge on the query's hottest stream; BloomMightContain is the
       // same probe as a codegen'd Catalyst expression
       BloomPred(
-        graft.functions.BloomMightContain.column(s, bfB, xxhash64(pu, pv)),
+        graft.functions.BloomMightContain.column(bfB, xxhash64(pu, pv)),
         () => { bfB.destroy(); () })
     } else BloomPred(lit(true), () => ())
   }

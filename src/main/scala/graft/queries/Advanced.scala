@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Num, QueryDef, Tables}
@@ -15,7 +15,6 @@ import graft.operators.TextOps
   * that survives 100 TB, unlike two-pass mean-then-residual formulas.
   */
 object Advanced {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
   import Num.{dsum, dsumSql}
 
   /** null when zero — ANSI-safe denominator guard. */
@@ -31,7 +30,7 @@ object Advanced {
     QueryDef(
       "q60_deterministic_stats",
       (s, d) => {
-        val li = t(s, d, "lineitem")
+        val li = Tables(s, d, "lineitem")
         val x = col("l_quantity")
         val y = col("l_extendedprice")
         li.groupBy("l_returnflag")
@@ -81,7 +80,7 @@ object Advanced {
         val rate = when(col("o_orderstatus") === "F", 10)
           .when(col("o_orderstatus") === "O", 5)
           .otherwise(50)
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .filter(bucket < rate)
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
       },
@@ -99,8 +98,8 @@ object Advanced {
     QueryDef(
       "q62_salted_join",
       (s, d) => {
-        val li = t(s, d, "lineitem")
-        val o = t(s, d, "orders")
+        val li = Tables(s, d, "lineitem")
+        val o = Tables(s, d, "orders")
           .withColumnRenamed("o_orderkey", "l_orderkey")
           .select("l_orderkey", "o_orderpriority")
         graft.operators.SaltedJoin(li, o, Seq("l_orderkey"), saltFactor = 8)
@@ -128,7 +127,7 @@ object Advanced {
     QueryDef(
       "q63_ivf_ann",
       (s, d) => {
-        val emb = t(s, d, "embeddings")
+        val emb = Tables(s, d, "embeddings")
           .withColumn("vec", expr("transform(embedding, x -> cast(x as double))"))
         graft.operators.Similarity.ivfTopK(
           emb, "vec_id", "vec", queryFilter = pmod(col("vec_id"), lit(50)) === 0, k = 5,
@@ -152,7 +151,7 @@ object Advanced {
     QueryDef(
       "q64_word_count",
       (s, d) =>
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(explode(split(col("text"), " ")).as("word"))
           .groupBy("word")
           .agg(count(lit(1)).as("n")),
@@ -169,7 +168,7 @@ object Advanced {
       (s, d) => {
         val w = Window.partitionBy("text_md5")
           .orderBy(col("n_chars").desc, col("doc_id").asc)
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .withColumn("text_md5", md5(col("text")))
           .withColumn("rnk", row_number().over(w))
           .filter(col("rnk") === 1)
@@ -190,7 +189,7 @@ object Advanced {
     QueryDef(
       "q67_funnel",
       (s, d) => {
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
         val firstClick = ev.filter(col("event_type") === "click")
           .groupBy("user_id").agg(min(col("ts")).as("first_click"))
         val purchases = ev.filter(col("event_type") === "purchase")
@@ -230,7 +229,7 @@ object Advanced {
     QueryDef(
       "q68_correlated_subquery",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_orders_corr")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_orders_corr")
         s.sql(s"""
           SELECT o_orderkey, o_custkey, o_totalprice
           FROM graft_orders_corr o
@@ -254,7 +253,7 @@ object Advanced {
     QueryDef(
       "q69_chi_square",
       (s, d) => {
-        val counts = t(s, d, "orders")
+        val counts = Tables(s, d, "orders")
           .groupBy("o_orderstatus", "o_orderpriority")
           .agg(count(lit(1)).as("n"))
           .cache() // tiny (|status|×|priority| rows); reused three ways below
@@ -298,7 +297,7 @@ object Advanced {
     QueryDef(
       "q70_gini_diversity",
       (s, d) => {
-        val counts = t(s, d, "documents")
+        val counts = Tables(s, d, "documents")
           .groupBy("lang", "source")
           .agg(count(lit(1)).as("n"))
         val byLang = counts.groupBy("lang").agg(sum("n").as("lang_n"))
@@ -329,7 +328,7 @@ object Advanced {
     QueryDef(
       "q66_frame_sample",
       (s, d) =>
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(col("doc_id"), col("n_chars"),
             explode(expr("sequence(0, cast(greatest(ceil(length(text) / 64.0), 1) as int) - 1)"))
               .as("frame_idx"),
@@ -354,9 +353,9 @@ object Advanced {
     QueryDef(
       "q72_bloom_semi_join",
       (s, d) => {
-        val dim = t(s, d, "part").filter(col("p_size") >= 48)
+        val dim = Tables(s, d, "part").filter(col("p_size") >= 48)
         graft.operators.BloomJoin
-          .semiJoinLong(t(s, d, "lineitem"), "l_partkey", dim, "p_partkey",
+          .semiJoinLong(Tables(s, d, "lineitem"), "l_partkey", dim, "p_partkey",
             expectedKeys = 100000L)
           .groupBy("l_returnflag")
           .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
@@ -376,10 +375,10 @@ object Advanced {
     QueryDef(
       "q73_gap_fill_months",
       (s, d) => {
-        val o = t(s, d, "orders")
-          .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-          .join(broadcast(t(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
-          .join(broadcast(t(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
+        val o = Tables(s, d, "orders")
+          .join(Tables(s, d, "customer"), col("o_custkey") === col("c_custkey"))
+          .join(broadcast(Tables(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
+          .join(broadcast(Tables(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
           .select(date_trunc("month", col("o_orderdate")).cast("date").as("month"),
             col("r_name"), col("o_totalprice"))
         val actual = o.groupBy("month", "r_name")
@@ -387,7 +386,7 @@ object Advanced {
         val bounds = o.agg(min("month").as("lo"), max("month").as("hi"))
         val spine = bounds
           .select(explode(expr("sequence(lo, hi, interval 1 month)")).as("month"))
-          .crossJoin(t(s, d, "region").select(col("r_name")))
+          .crossJoin(Tables(s, d, "region").select(col("r_name")))
         spine.join(actual, Seq("month", "r_name"), "left")
           .select(col("month"), col("r_name"),
             coalesce(col("revenue"), lit(0.0)).as("revenue"),
@@ -428,7 +427,7 @@ object Advanced {
       "q74_bm25",
       (s, d) => {
         val terms = Seq("spark", "data", "query")
-        val tf = t(s, d, "documents")
+        val tf = Tables(s, d, "documents")
           .withColumn("toks", split(col("text"), " "))
           .select(
             (col("doc_id") +: size(col("toks")).as("dl") +:
@@ -482,15 +481,15 @@ object Advanced {
     QueryDef(
       "q75_upsert_merge",
       (s, d) => {
-        val base = t(s, d, "customer")
+        val base = Tables(s, d, "customer")
           .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
-        val batch = t(s, d, "customer")
+        val batch = Tables(s, d, "customer")
           .filter(col("c_custkey") % 3 === 0)
           .select(col("c_custkey"),
             (col("c_acctbal") + 100.0).as("c_acctbal"),
             lit("REFRESHED").as("c_mktsegment"))
           .unionAll(
-            t(s, d, "customer")
+            Tables(s, d, "customer")
               .agg(max("c_custkey").as("mx"))
               .select(explode(expr("sequence(mx + 1, mx + 50)")).as("c_custkey"),
                 lit(0.0).as("c_acctbal"), lit("NEW").as("c_mktsegment")))
@@ -533,7 +532,7 @@ object Advanced {
       "q76_scd2_intervals",
       (s, d) => {
         val w = Window.partitionBy("o_custkey").orderBy("valid_from", "o_orderkey")
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .select(col("o_custkey"), col("o_orderkey"),
             col("o_orderpriority").as("status"),
             col("o_orderdate").as("valid_from"))
@@ -560,7 +559,7 @@ object Advanced {
       (s, d) => {
         val segs = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
         val w = Window.partitionBy("c_mktsegment")
-        t(s, d, "customer")
+        Tables(s, d, "customer")
           .select(
             (col("c_custkey") +: col("c_mktsegment") +: col("c_acctbal") +:
               segs.map(g =>
@@ -591,7 +590,7 @@ object Advanced {
     QueryDef(
       "q78_impute_median",
       (s, d) => {
-        val base = t(s, d, "customer")
+        val base = Tables(s, d, "customer")
           .select(col("c_custkey"), col("c_mktsegment"),
             when(col("c_custkey") % 7 === 0, lit(null)).otherwise(col("c_acctbal"))
               .as("bal"))
@@ -622,7 +621,7 @@ object Advanced {
       "q82_profile",
       (s, d) =>
         graft.operators.DataProfile.numericProfile(
-          t(s, d, "customer")
+          Tables(s, d, "customer")
             .withColumn("bal_or_null",
               when(col("c_custkey") % 11 === 0, lit(null)).otherwise(col("c_acctbal"))),
           Seq("c_custkey", "c_nationkey", "bal_or_null")),
@@ -653,7 +652,7 @@ object Advanced {
       (s, d) => {
         val w = Window.partitionBy("c_mktsegment")
           .orderBy(col("c_acctbal"), col("c_custkey"))
-        t(s, d, "customer")
+        Tables(s, d, "customer")
           .withColumn("decile", ntile(10).over(w))
           .groupBy("c_mktsegment", "decile")
           .agg(
@@ -684,7 +683,7 @@ object Advanced {
       (s, d) => {
         val w = Window.partitionBy("c_nationkey")
           .orderBy(col("c_acctbal").desc, col("c_custkey"))
-        t(s, d, "customer")
+        Tables(s, d, "customer")
           .withColumn("rk", row_number().over(w))
           .filter(col("rk") <= 5)
           .groupBy("c_nationkey")
@@ -710,7 +709,7 @@ object Advanced {
     QueryDef(
       "q79_unpivot",
       (s, d) =>
-        t(s, d, "customer")
+        Tables(s, d, "customer")
           .select(col("c_custkey"),
             expr("""stack(2, 'acctbal', c_acctbal,
                              'nationkey', cast(c_nationkey as double))""")
@@ -730,7 +729,7 @@ object Advanced {
       "q91_global_equidepth",
       (s, d) =>
         graft.operators.EquiDepthBins.globalBins(
-          t(s, d, "customer"), "c_acctbal", bins = 10),
+          Tables(s, d, "customer"), "c_acctbal", bins = 10),
       Some(graft.operators.EquiDepthBins.globalBinsDuck(
         "customer", "c_acctbal", bins = 10))),
   )

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Num, QueryDef, Tables}
@@ -12,7 +12,6 @@ import graft.operators.AsOfJoin
   * categories" note says the harness demands.
   */
 object Events {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
   import Num.dsumSql
 
   val defs: Seq[QueryDef] = Seq(
@@ -21,7 +20,7 @@ object Events {
     QueryDef(
       "q27_json_extract",
       (s, d) =>
-        t(s, d, "events")
+        Tables(s, d, "events")
           .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
           .groupBy(col("event_type"), (col("k") % 10).as("k_mod"))
           .agg(count(lit(1)).as("n"), Num.dsum(col("value")).as("sum_value")),
@@ -38,7 +37,7 @@ object Events {
     QueryDef(
       "q55_from_json_struct",
       (s, d) =>
-        t(s, d, "events")
+        Tables(s, d, "events")
           .withColumn("p", from_json(col("props"),
             org.apache.spark.sql.types.StructType.fromDDL("k INT")))
           .groupBy((col("p.k") % 5).as("k_mod5"))
@@ -59,7 +58,7 @@ object Events {
     QueryDef(
       "q28_asof_join",
       (s, d) => {
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
         val purchases = ev.filter(col("event_type") === "purchase")
           .select("event_id", "user_id", "ts")
         val clicks = ev.filter(col("event_type") === "click")
@@ -106,7 +105,7 @@ object Events {
       (s, d) => {
         import graft.streaming.EventStreams
         EventStreams.sessionStats(
-          EventStreams.sessionize(t(s, d, "events"), "30 minutes"))
+          EventStreams.sessionize(Tables(s, d, "events"), "30 minutes"))
       },
       Some("""
         WITH flagged AS (
@@ -172,7 +171,7 @@ object Events {
       "q85_interval_join",
       (s, d) => {
         import graft.operators.RangeJoin
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
         val hourUs = 3600000000L
         val clicks = ev.filter(col("event_type") === "click")
           .select(col("event_id").as("click_id"), unix_micros(col("ts")).as("t"))
@@ -200,7 +199,7 @@ object Events {
       "q86_transitions",
       (s, d) => {
         val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        t(s, d, "events")
+        Tables(s, d, "events")
           .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
           .withColumn("prev_type", lag("event_type", 1).over(w))
           .filter(col("prev_type").isNotNull)
@@ -225,7 +224,7 @@ object Events {
     QueryDef(
       "q87_cohort_retention",
       (s, d) => {
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .select(col("user_id"),
             date_trunc("day", col("ts")).cast("date").as("day"))
         val first = ev.groupBy("user_id").agg(min("day").as("cohort"))
@@ -266,7 +265,7 @@ object Events {
       (s, d) => {
         val w = Window.partitionBy("user_id")
           .orderBy(col("ts").desc, col("event_id").desc)
-        t(s, d, "events")
+        Tables(s, d, "events")
           .select(col("user_id"), col("ts"), col("event_id"), col("value"))
           .withColumn("rk", row_number().over(w))
           .withColumn("wgt",

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -17,15 +17,13 @@ import graft.{QueryDef, Tables}
   * output schema, zero shuffles) is the real, tested artifact.
   */
 object Multimodal {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
     QueryDef(
       "q124_binary_pool8",
       (s, d) => {
         import s.implicits._
         val cells = 8
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
           .as[(Long, Array[Byte])]
           .mapPartitions { iter =>

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Num, QueryDef, Tables}
@@ -24,7 +24,6 @@ import graft.{Num, QueryDef, Tables}
   *     partition sort exists anywhere.
   */
 object Relational {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
   import Num.{dsum, dsumSql}
 
   val defs: Seq[QueryDef] = Seq(
@@ -33,7 +32,7 @@ object Relational {
     QueryDef(
       "q01_pricing_summary",
       (s, d) =>
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .filter(col("l_shipdate") <= lit("1999-06-30").cast("timestamp"))
           .groupBy("l_returnflag", "l_linestatus")
           .agg(
@@ -63,7 +62,7 @@ object Relational {
     QueryDef(
       "q02_top_orders",
       (s, d) =>
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice")
           .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
           .limit(10),
@@ -75,10 +74,10 @@ object Relational {
     QueryDef(
       "q03_revenue_by_nation",
       (s, d) => {
-        val li = t(s, d, "lineitem")
-        val o = t(s, d, "orders")
-        val c = t(s, d, "customer")
-        val n = t(s, d, "nation")
+        val li = Tables(s, d, "lineitem")
+        val o = Tables(s, d, "orders")
+        val c = Tables(s, d, "customer")
+        val n = Tables(s, d, "nation")
         li.join(o, li("l_orderkey") === o("o_orderkey"))
           .join(broadcast(c), o("o_custkey") === c("c_custkey"))
           .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
@@ -101,8 +100,8 @@ object Relational {
     QueryDef(
       "q04_semi_join",
       (s, d) => {
-        val c = t(s, d, "customer")
-        val o = t(s, d, "orders").filter(col("o_orderstatus") === "F")
+        val c = Tables(s, d, "customer")
+        val o = Tables(s, d, "orders").filter(col("o_orderstatus") === "F")
         c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
           .groupBy("c_mktsegment")
           .agg(count(lit(1)).as("n_cust"))
@@ -117,8 +116,8 @@ object Relational {
     QueryDef(
       "q05_anti_join",
       (s, d) => {
-        val c = t(s, d, "customer")
-        val o = t(s, d, "orders").filter(col("o_orderstatus") === "P")
+        val c = Tables(s, d, "customer")
+        val o = Tables(s, d, "orders").filter(col("o_orderstatus") === "P")
         c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
           .select("c_custkey", "c_mktsegment")
       },
@@ -131,8 +130,8 @@ object Relational {
     QueryDef(
       "q06_outer_join_agg",
       (s, d) => {
-        val o = t(s, d, "orders")
-        val liAgg = t(s, d, "lineitem")
+        val o = Tables(s, d, "orders")
+        val liAgg = Tables(s, d, "lineitem")
           .filter(col("l_quantity") >= 30)
           .groupBy("l_orderkey")
           .agg(count(lit(1)).as("cnt"), dsum(col("l_quantity")).as("qty"))
@@ -159,7 +158,7 @@ object Relational {
       (s, d) => {
         val w = Window.partitionBy("o_custkey")
           .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .withColumn("rnk", row_number().over(w))
           .filter(col("rnk") <= 3)
           .select("o_custkey", "o_orderkey", "o_totalprice", "rnk")
@@ -179,7 +178,7 @@ object Relational {
         val w = Window.partitionBy("o_custkey")
           .orderBy(col("o_orderdate"), col("o_orderkey"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .withColumn("run_total",
             sum(col("o_totalprice").cast("decimal(28,6)")).over(w).cast("double"))
           .select("o_custkey", "o_orderkey", "run_total")
@@ -197,7 +196,7 @@ object Relational {
       (s, d) => {
         val w = Window.partitionBy("o_custkey")
           .orderBy(col("o_orderdate"), col("o_orderkey"))
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .withColumn("prev_price", lag("o_totalprice", 1).over(w))
           .withColumn("next_price", lead("o_totalprice", 1).over(w))
           .withColumn("days_since_prev",
@@ -218,7 +217,7 @@ object Relational {
     QueryDef(
       "q10_rollup",
       (s, d) =>
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .rollup("o_orderstatus", "o_orderpriority")
           .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total")),
       Some(s"""
@@ -230,7 +229,7 @@ object Relational {
     QueryDef(
       "q11_cube",
       (s, d) =>
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .cube("l_returnflag", "l_linestatus")
           .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("qty")),
       Some(s"""
@@ -242,7 +241,7 @@ object Relational {
     QueryDef(
       "q12_grouping_sets",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_orders_gs")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_orders_gs")
         s.sql(s"""
           SELECT o_orderstatus, o_orderpriority, count(*) AS n,
                  ${dsumSql("o_totalprice")} AS total
@@ -259,10 +258,10 @@ object Relational {
     QueryDef(
       "q13_union_all",
       (s, d) =>
-        t(s, d, "customer")
+        Tables(s, d, "customer")
           .select(lit("customer").as("src"), col("c_custkey").as("key"))
           .unionByName(
-            t(s, d, "supplier").select(lit("supplier").as("src"), col("s_suppkey").as("key"))),
+            Tables(s, d, "supplier").select(lit("supplier").as("src"), col("s_suppkey").as("key"))),
       Some("""
         SELECT 'customer' AS src, c_custkey AS key FROM customer
         UNION ALL
@@ -272,7 +271,7 @@ object Relational {
     QueryDef(
       "q14_intersect",
       (s, d) => {
-        val o = t(s, d, "orders")
+        val o = Tables(s, d, "orders")
         o.filter(col("o_orderstatus") === "F").select(col("o_custkey").as("custkey"))
           .intersect(o.filter(col("o_orderstatus") === "O").select(col("o_custkey").as("custkey")))
       },
@@ -285,8 +284,8 @@ object Relational {
     QueryDef(
       "q15_except",
       (s, d) =>
-        t(s, d, "customer").select(col("c_custkey").as("custkey"))
-          .except(t(s, d, "orders").filter(col("o_orderstatus") === "P")
+        Tables(s, d, "customer").select(col("c_custkey").as("custkey"))
+          .except(Tables(s, d, "orders").filter(col("o_orderstatus") === "P")
             .select(col("o_custkey").as("custkey"))),
       Some("""
         SELECT c_custkey AS custkey FROM customer
@@ -297,7 +296,7 @@ object Relational {
     QueryDef(
       "q16_distinct_sort",
       (s, d) =>
-        t(s, d, "orders").select("o_orderpriority").distinct().orderBy("o_orderpriority"),
+        Tables(s, d, "orders").select("o_orderpriority").distinct().orderBy("o_orderpriority"),
       Some("SELECT DISTINCT o_orderpriority FROM orders ORDER BY o_orderpriority")),
 
     // ---- pivot / contingency table (D4): explicit value list — avoids the
@@ -306,7 +305,7 @@ object Relational {
       "q17_pivot",
       (s, d) => {
         val priorities = Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .groupBy("o_orderstatus")
           .pivot("o_orderpriority", priorities)
           .count()
@@ -325,7 +324,7 @@ object Relational {
     QueryDef(
       "q18_value_counts",
       (s, d) =>
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .groupBy("l_returnflag")
           .agg(count(lit(1)).as("n"))
           .orderBy(col("n").desc, col("l_returnflag")),
@@ -337,7 +336,7 @@ object Relational {
     QueryDef(
       "q19_null_counts",
       (s, d) => {
-        val o = t(s, d, "orders")
+        val o = Tables(s, d, "orders")
         o.select(o.columns.map(c =>
           count(when(col(c).isNull, lit(1))).as(s"${c}_nulls")).toSeq: _*)
       },
@@ -354,7 +353,7 @@ object Relational {
     QueryDef(
       "q20_conditional_counts",
       (s, d) =>
-        t(s, d, "orders").agg(
+        Tables(s, d, "orders").agg(
           count(when(col("o_orderstatus") === "F", lit(1))).as("n_f"),
           count(when(col("o_orderstatus") === "O", lit(1))).as("n_o"),
           count(when(col("o_orderstatus") === "P", lit(1))).as("n_p"),
@@ -370,7 +369,7 @@ object Relational {
     QueryDef(
       "q26_monthly_revenue",
       (s, d) =>
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
           .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("revenue")),
       Some(s"""

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{Num, QueryDef, Tables}
 
@@ -9,15 +9,13 @@ import graft.{Num, QueryDef, Tables}
   * and date scalar functions.
   */
 object Relational2 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- distinct aggregation (exact)
     QueryDef(
       "q31_distinct_agg",
       (s, d) =>
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .groupBy("l_returnflag")
           .agg(
             countDistinct(col("l_suppkey")).as("n_supp"),
@@ -44,7 +42,7 @@ object Relational2 {
     QueryDef(
       "q32_approx_distinct",
       (s, d) =>
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .groupBy("l_returnflag")
           .agg(
             approx_count_distinct(col("l_partkey"), 0.01).as("__approx"),
@@ -72,7 +70,7 @@ object Relational2 {
           ("mid", 20000.0, 60000.0),
           ("high", 60000.0, 1e18)
         )).toDF("band", "lo", "hi")
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .join(broadcast(bands),
             col("l_extendedprice") >= col("lo") && col("l_extendedprice") < col("hi"))
           .groupBy("band")
@@ -91,7 +89,7 @@ object Relational2 {
     QueryDef(
       "q34_full_outer",
       (s, d) => {
-        val o = t(s, d, "orders")
+        val o = Tables(s, d, "orders")
         val f = o.filter(col("o_orderstatus") === "F")
           .groupBy(col("o_custkey").as("ck_f")).agg(count(lit(1)).as("n_f"))
         val p = o.filter(col("o_orderstatus") === "P")
@@ -116,7 +114,7 @@ object Relational2 {
     QueryDef(
       "q35_scalar_subquery",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_orders_sq")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_orders_sq")
         // decimal-accumulated avg: the threshold must be bit-identical in
         // both engines or boundary rows could flip
         s.sql(s"""
@@ -135,7 +133,7 @@ object Relational2 {
     QueryDef(
       "q36_string_funcs",
       (s, d) =>
-        t(s, d, "part").select(
+        Tables(s, d, "part").select(
           col("p_partkey"),
           upper(col("p_name")).as("name_upper"),
           substring(col("p_name"), 1, 5).as("name_pfx"),
@@ -157,7 +155,7 @@ object Relational2 {
     QueryDef(
       "q37_date_parts",
       (s, d) =>
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .groupBy(
             year(col("o_orderdate")).as("y"),
             quarter(col("o_orderdate")).as("q"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Num, QueryDef, Tables}
@@ -10,8 +10,6 @@ import graft.functions.GeometricMean
   * custom typed aggregate (UDAF surface).
   */
 object Relational3 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- RANGE window frame: trailing-7-day order total per customer
@@ -21,7 +19,7 @@ object Relational3 {
         val days = datediff(col("o_orderdate"), lit("1995-01-01").cast("timestamp"))
         val w = Window.partitionBy("o_custkey").orderBy(days)
           .rangeBetween(-6, Window.currentRow)
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .withColumn("trail7_total",
             sum(col("o_totalprice").cast("decimal(28,6)")).over(w).cast("double"))
           .select("o_orderkey", "o_custkey", "trail7_total")
@@ -39,7 +37,7 @@ object Relational3 {
     QueryDef(
       "q39_array_funcs",
       (s, d) =>
-        t(s, d, "events")
+        Tables(s, d, "events")
           .groupBy("user_id")
           .agg(
             concat_ws(",", sort_array(collect_set(col("event_type")))).as("types"),
@@ -56,7 +54,7 @@ object Relational3 {
     QueryDef(
       "q56_arg_max_min",
       (s, d) =>
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .groupBy("o_orderstatus")
           .agg(
             expr("max_by(o_orderkey, o_totalprice)").as("priciest_order"),
@@ -75,7 +73,7 @@ object Relational3 {
     QueryDef(
       "q57_histogram",
       (s, d) =>
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .groupBy(floor(col("l_extendedprice") / 10000.0).cast("long").as("bucket_10k"))
           .agg(count(lit(1)).as("n"), Num.dsum(col("l_extendedprice")).as("total")),
       Some(s"""
@@ -89,7 +87,7 @@ object Relational3 {
       (s, d) => {
         val w = Window.partitionBy("l_returnflag")
           .orderBy(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .withColumn("quartile", ntile(4).over(w))
           .withColumn("pct_rank", round(percent_rank().over(w), 6))
           .withColumn("cume", round(cume_dist().over(w), 6))
@@ -130,7 +128,7 @@ object Relational3 {
       "q54_custom_agg_geomean",
       (s, d) => {
         val geomean = udaf(GeometricMean)
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .groupBy("l_returnflag")
           .agg(
             round(geomean(col("l_extendedprice")), 4).as("geo_price"),
@@ -153,7 +151,7 @@ object Relational3 {
       "q125_topk_perkey",
       (s, d) =>
         graft.plans.TopKPerKey(
-          t(s, d, "orders").select("o_orderpriority", "o_orderkey", "o_totalprice"),
+          Tables(s, d, "orders").select("o_orderpriority", "o_orderkey", "o_totalprice"),
           keyCols = Seq("o_orderpriority"),
           orderCols = Seq("o_totalprice" -> false, "o_orderkey" -> true),
           k = 3),
@@ -176,7 +174,7 @@ object Relational3 {
     QueryDef(
       "q127_mad_outliers",
       (s, d) => {
-        val li = t(s, d, "lineitem").select("l_returnflag", "l_extendedprice")
+        val li = Tables(s, d, "lineitem").select("l_returnflag", "l_extendedprice")
         val med = li.groupBy("l_returnflag")
           .agg(round(expr("percentile(l_extendedprice, 0.5)"), 6).as("med"))
         val withMed = li.join(broadcast(med), "l_returnflag")

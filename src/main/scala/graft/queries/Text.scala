@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.operators.TextOps._
@@ -16,8 +16,6 @@ import graft.operators.TextOps._
   * fan-in is bounded by band-bucket size, not corpus size.
   */
 object Text {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   private val stopwords = Seq("the", "a")
   private val stopListSql = stopwords.map(w => s"'$w'").mkString(", ")
 
@@ -27,7 +25,7 @@ object Text {
     QueryDef(
       "q40_text_stats",
       (s, d) =>
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .withColumn("n_words", expr("size(split(text, ' '))"))
           .withColumn("stop_hits",
             expr(s"size(filter(split(text, ' '), w -> w IN ($stopListSql)))"))
@@ -65,7 +63,7 @@ object Text {
           val list = words.map(w => s"'$w'").mkString(", ")
           expr(s"cast(size(filter(split(text, ' '), w -> w IN ($list))) as bigint)")
         }
-        val scored = markers.foldLeft(t(s, d, "documents")) {
+        val scored = markers.foldLeft(Tables(s, d, "documents")) {
           case (df, (l, ws)) => df.withColumn(s"${l}_score", hits(ws))
         }
         scored.select(
@@ -106,7 +104,7 @@ object Text {
     QueryDef(
       "q42_token_count",
       (s, d) =>
-        t(s, d, "documents").select(
+        Tables(s, d, "documents").select(
           col("doc_id"),
           expr("cast(size(split(text, ' ')) as bigint)").as("ws_tokens"),
           expr("cast(size(regexp_extract_all(text, '[a-z]+', 0)) as bigint)").as("alpha_tokens"),
@@ -122,7 +120,7 @@ object Text {
     QueryDef(
       "q43_fingerprint",
       (s, d) =>
-        t(s, d, "documents").select(
+        Tables(s, d, "documents").select(
           col("doc_id"),
           md5(col("text")).as("exact_md5"),
           expr(fingerprintSpark()).as("content_fp")),
@@ -135,7 +133,7 @@ object Text {
     QueryDef(
       "q44_dedup_exact",
       (s, d) =>
-        graft.operators.Dedup.exactGroups(t(s, d, "documents"), "doc_id", "text"),
+        graft.operators.Dedup.exactGroups(Tables(s, d, "documents"), "doc_id", "text"),
       Some("""
         SELECT md5(text) AS text_md5, min(doc_id) AS keeper_doc_id,
                count(*) AS n_copies
@@ -145,7 +143,7 @@ object Text {
     QueryDef(
       "q45_minhash_bands",
       (s, d) =>
-        graft.operators.Dedup.minhashBands(t(s, d, "documents"), "doc_id", "text"),
+        graft.operators.Dedup.minhashBands(Tables(s, d, "documents"), "doc_id", "text"),
       Some(s"""
         WITH wh AS (SELECT doc_id, ${wordHashesDuck()} AS wh FROM documents),
         hashed AS (SELECT doc_id, ${ngramHashesDuck(3, "wh")} AS hh FROM wh)
@@ -159,7 +157,7 @@ object Text {
       (s, d) => {
         import graft.operators.Dedup
         Dedup.minhashCandidatePairs(
-          Dedup.minhashBands(t(s, d, "documents"), "doc_id", "text"), "doc_id")
+          Dedup.minhashBands(Tables(s, d, "documents"), "doc_id", "text"), "doc_id")
           .withColumnRenamed("doc_id_a", "doc_a")
           .withColumnRenamed("doc_id_b", "doc_b")
       },
@@ -192,7 +190,7 @@ object Text {
       "q47_ngram_jaccard",
       (s, d) =>
         graft.operators.Dedup.jaccardPairs(
-          t(s, d, "documents"), "doc_id", "text", dfCap = 64),
+          Tables(s, d, "documents"), "doc_id", "text", dfCap = 64),
       Some(s"""
         WITH wh AS (
           SELECT doc_id, ${wordHashesDuck()} AS wh FROM documents),
@@ -216,7 +214,7 @@ object Text {
     QueryDef(
       "q48_simhash",
       (s, d) =>
-        graft.operators.Dedup.simhash(t(s, d, "documents"), "doc_id", "text"),
+        graft.operators.Dedup.simhash(Tables(s, d, "documents"), "doc_id", "text"),
       Some(s"""
         WITH h AS (SELECT doc_id, ${wordHashesDuck()} AS hs FROM documents)
         SELECT doc_id, ${simhashDuck("hs", 16)} AS simhash16
@@ -233,7 +231,7 @@ object Text {
       (s, d) => {
         import graft.operators.Dedup
         import org.apache.spark.sql.expressions.Window
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val pairs = Dedup.minhashCandidatePairs(
           Dedup.minhashBands(docs, "doc_id", "text"), "doc_id")
         val comp = Dedup.connectedComponents(pairs, "doc_id_a", "doc_id_b")
@@ -260,7 +258,7 @@ object Text {
     QueryDef(
       "q99_dedup_pipeline",
       (s, d) =>
-        graft.operators.Dedup.dedupe(t(s, d, "documents"), "doc_id", "text"),
+        graft.operators.Dedup.dedupe(Tables(s, d, "documents"), "doc_id", "text"),
       Some(s"""
         WITH RECURSIVE exact AS (
           SELECT min(doc_id) AS doc_id, count(*) AS n_copies
@@ -289,7 +287,7 @@ object Text {
     QueryDef(
       "q89_fuzzy_name_pairs",
       (s, d) => {
-        val names = t(s, d, "part").select(col("p_name")).distinct()
+        val names = Tables(s, d, "part").select(col("p_name")).distinct()
         names.as("a").join(names.as("b"),
           substring(col("a.p_name"), 1, 2) === substring(col("b.p_name"), 1, 2) &&
             abs(length(col("a.p_name")) - length(col("b.p_name"))) <= 4 &&
@@ -322,7 +320,7 @@ object Text {
     QueryDef(
       "q132_simhash_degree",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val sh = graft.operators.Dedup.simhash(docs, "doc_id", "text")
           .select(col("doc_id"), col("simhash16"),
             expr("simhash16 div 256").as("hi"), expr("simhash16 % 256").as("lo"))
@@ -382,7 +380,7 @@ object Text {
     QueryDef(
       "q141_simhash60_degree",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val sh = graft.operators.Dedup.simhash(docs, "doc_id", "text", bits = 60)
         val banded = (0 until 4).foldLeft(sh) { (df, i) =>
           df.withColumn(s"b$i", expr(s"shiftright(simhash60, ${15 * i}) & 32767"))

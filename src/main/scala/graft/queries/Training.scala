@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -18,8 +18,6 @@ import graft.{QueryDef, Tables}
   * parity.
   */
 object Training {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   // -- q92's quality gate, shared with the q114 manifest (Training3) so
   // the keep-rule cannot drift between the per-doc report and the
   // end-to-end pipeline. Both engines' formulations live here: the
@@ -111,7 +109,7 @@ object Training {
     QueryDef(
       "q92_repetition_filter",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         wordStats(docs).join(gramStats(docs), "doc_id")
           .select(
             col("doc_id"),
@@ -146,7 +144,7 @@ object Training {
       (s, d) => {
         val h = expr("cast(conv(substr(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint)")
         val w = Window.partitionBy("lang", "source").orderBy(col("__h").asc, col("doc_id").asc)
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .withColumn("__h", h)
           .withColumn("__rk", row_number().over(w))
           .withColumn("__n", count(lit(1)).over(Window.partitionBy("lang", "source")))
@@ -180,7 +178,7 @@ object Training {
         val h = expr("cast(conv(substr(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint)")
         val w = Window.partitionBy("shard").orderBy(col("__h").asc, col("doc_id").asc)
           .rowsBetween(Window.unboundedPreceding, -1)
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .withColumn("__h", h)
           .withColumn("shard", pmod(col("__h"), lit(64)))
           .withColumn("tokens", expr("cast(size(split(text, ' ')) as bigint)"))
@@ -219,7 +217,7 @@ object Training {
         import graft.operators.TextOps
         val grams = expr(TextOps.shingleHashesSpark(
           s"(${TextOps.ngramsSpark(5, "text")})"))
-        val docs = t(s, d, "documents").withColumn("__g", grams)
+        val docs = Tables(s, d, "documents").withColumn("__g", grams)
         val ev = docs.filter(col("source") === "src0")
           .select(explode(col("__g")).as("h")).distinct()
         docs.filter(col("source") =!= "src0")
@@ -256,7 +254,7 @@ object Training {
       "q96_mixture_rebalance",
       (s, d) => {
         val h = expr("cast(conv(substr(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint)")
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .withColumn("__h", h)
           .filter(col("__h") < mixtureThresholdCol)
           .groupBy("lang")
@@ -282,7 +280,7 @@ object Training {
       (s, d) => {
         val norm = trim(regexp_replace(
           regexp_replace(lower(col("text")), "[^a-z0-9 ]", " "), " +", " "))
-        t(s, d, "documents").select(
+        Tables(s, d, "documents").select(
           col("doc_id"),
           md5(norm).as("norm_md5"),
           length(norm).cast("long").as("norm_chars"),
@@ -307,7 +305,7 @@ object Training {
     QueryDef(
       "q98_vocab_topk",
       (s, d) =>
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(explode(split(col("text"), " ")).as("word"))
           .groupBy("word")
           .agg(count(lit(1)).as("n"))

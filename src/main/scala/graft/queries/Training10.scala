@@ -37,13 +37,11 @@ import graft.{QueryDef, Tables}
   * to 6 dp) — bit-identical across engines and shuffle orders.
   */
 object Training10 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** Daily gross revenue in exact cents, keyed by epoch-day x.
     * The single big-data pass shared by q166/q167/q168.
     */
   private def dailyRevenue(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
+    Tables(s, d, "lineitem")
       .select(
         expr("CAST(datediff(CAST(l_shipdate AS DATE), DATE '1970-01-01') AS BIGINT)")
           .as("x"),
@@ -202,8 +200,8 @@ object Training10 {
     QueryDef(
       "q169_basket_rules",
       (s, d) => {
-        val ob = t(s, d, "lineitem")
-          .join(broadcast(t(s, d, "part")), col("l_partkey") === col("p_partkey"))
+        val ob = Tables(s, d, "lineitem")
+          .join(broadcast(Tables(s, d, "part")), col("l_partkey") === col("p_partkey"))
           .select(col("l_orderkey").as("o"), col("p_brand").as("b"))
           .distinct()
           .localCheckpoint() // consumed 4× (N, supports, both join sides)
@@ -259,7 +257,7 @@ object Training10 {
     QueryDef(
       "q170_k_anonymity",
       (s, d) =>
-        t(s, d, "customer")
+        Tables(s, d, "customer")
           .select(col("c_nationkey"), col("c_mktsegment"),
             expr("""(CAST(round(c_acctbal * 100, 0) AS BIGINT) div 100000) +
                     CASE WHEN CAST(round(c_acctbal * 100, 0) AS BIGINT) % 100000 < 0
@@ -310,7 +308,7 @@ object Training10 {
     QueryDef(
       "q171_km_survival",
       (s, d) => {
-        val o = t(s, d, "orders")
+        val o = Tables(s, d, "orders")
         val horizon = o.agg(max(col("o_orderdate").cast("date")).as("h"))
         val cust = o.groupBy("o_custkey")
           .agg(
@@ -387,7 +385,7 @@ object Training10 {
     QueryDef(
       "q172_cvar",
       (s, d) => {
-        val cents = t(s, d, "orders")
+        val cents = Tables(s, d, "orders")
           .select(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("c"))
         val n = cents.count()
         val k = (19 * n + 19) / 20 // ceil(0.95 n), exact integer
@@ -437,7 +435,7 @@ object Training10 {
     QueryDef(
       "q173_mwu_auc",
       (s, d) => {
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .filter(col("event_type").isin("click", "purchase"))
           .select(
             expr("CAST(round(value * 100, 0) AS BIGINT)").as("c"),

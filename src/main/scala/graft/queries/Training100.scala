@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.{Iterate, QueryDef, Tables}
 
@@ -29,8 +29,6 @@ import graft.{Iterate, QueryDef, Tables}
   *    optimal ≤ greedy is emitted and spec-pinned.
   */
 object Training100 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   // ---------------------------------------------------------------- q462
 
   private def fifoSql(spark: Boolean, lineitemRel: String, partRel: String): String = {
@@ -208,8 +206,8 @@ object Training100 {
     QueryDef(
       "q462_fifo_inventory",
       (s, d) => {
-        t(s, d, "lineitem").createOrReplaceTempView("graft_ff_lineitem")
-        t(s, d, "part").createOrReplaceTempView("graft_ff_part")
+        Tables(s, d, "lineitem").createOrReplaceTempView("graft_ff_lineitem")
+        Tables(s, d, "part").createOrReplaceTempView("graft_ff_part")
         s.sql(fifoSql(spark = true, "graft_ff_lineitem", "graft_ff_part"))
       },
       Some(fifoSql(spark = false, "lineitem", "part"))),
@@ -217,7 +215,7 @@ object Training100 {
     QueryDef(
       "q463_ipf_raking",
       (s, d) => {
-        t(s, d, "customer").createOrReplaceTempView("graft_ipf_customer")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_ipf_customer")
         var w = Iterate.ckpt(s.sql(
           s"WITH ${ipfBaseSql(spark = true, "graft_ipf_customer")} SELECT * FROM w0")
           .coalesce(1))
@@ -244,9 +242,9 @@ object Training100 {
     QueryDef(
       "q464_assignment_optimal",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_as_orders")
-        t(s, d, "lineitem").createOrReplaceTempView("graft_as_lineitem")
-        t(s, d, "customer").createOrReplaceTempView("graft_as_customer")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_as_orders")
+        Tables(s, d, "lineitem").createOrReplaceTempView("graft_as_lineitem")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_as_customer")
         val cost = Iterate.ckpt(s.sql(assignCostSql(spark = true,
           "graft_as_orders", "graft_as_lineitem", "graft_as_customer")).coalesce(1))
         cost.createOrReplaceTempView("graft_as_cost")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.{QueryDef, Tables}
 
@@ -28,8 +28,6 @@ import graft.{QueryDef, Tables}
   *    LEFT JOIN — the hash gate proves the rewrite is an identity.
   */
 object Training101 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   private def multiDistinctSql(custRel: String, ordersRel: String): String =
     s"""
       SELECT c.c_mktsegment AS seg,
@@ -110,8 +108,8 @@ object Training101 {
     QueryDef(
       "q465_multi_distinct_expand",
       (s, d) => {
-        t(s, d, "customer").createOrReplaceTempView("graft_md_customer")
-        t(s, d, "orders").createOrReplaceTempView("graft_md_orders")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_md_customer")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_md_orders")
         s.sql(multiDistinctSql("graft_md_customer", "graft_md_orders"))
       },
       Some(multiDistinctSql("customer", "orders"))),
@@ -119,7 +117,7 @@ object Training101 {
     QueryDef(
       "q466_bitemporal_asof",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_bt_orders")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_bt_orders")
         s.sql(bitemporalSql(spark = true, "graft_bt_orders"))
       },
       Some(bitemporalSql(spark = false, "orders"))),
@@ -128,11 +126,11 @@ object Training101 {
       "q467_null_skew_split",
       (s, d) => {
         import org.apache.spark.sql.functions._
-        val facts = t(s, d, "lineitem").selectExpr(
+        val facts = Tables(s, d, "lineitem").selectExpr(
           "CASE WHEN l_linenumber = 1 THEN NULL ELSE l_suppkey END AS sk",
           "CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS cents")
-        val supp = t(s, d, "supplier").as("s")
-          .join(t(s, d, "nation").as("n"),
+        val supp = Tables(s, d, "supplier").as("s")
+          .join(Tables(s, d, "nation").as("n"),
             expr("n.n_nationkey = s.s_nationkey"), "left")
           .selectExpr("s.s_suppkey AS sk", "n.n_name AS nn")
         // THE SPLIT: null FKs can never match — keep them out of the

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.{Iterate, QueryDef, Tables}
 
@@ -28,8 +28,6 @@ import graft.{Iterate, QueryDef, Tables}
   *    non-increasing in usage by construction (spec-pinned law).
   */
 object Training103 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   // ---------------------------------------------------------------- q469
 
   private val PDIMS = 8
@@ -204,7 +202,7 @@ object Training103 {
     QueryDef(
       "q469_batch_perceptron",
       (s, d) => {
-        t(s, d, "embeddings").createOrReplaceTempView("graft_pc_embeddings")
+        Tables(s, d, "embeddings").createOrReplaceTempView("graft_pc_embeddings")
         val data = Iterate.ckpt(s.sql(
           pcptDataSql(spark = true, "graft_pc_embeddings")))
         data.createOrReplaceTempView("graft_pc_data")
@@ -232,8 +230,8 @@ object Training103 {
     QueryDef(
       "q470_item_cf_recs",
       (s, d) => {
-        t(s, d, "lineitem").createOrReplaceTempView("graft_cf_lineitem")
-        t(s, d, "orders").createOrReplaceTempView("graft_cf_orders")
+        Tables(s, d, "lineitem").createOrReplaceTempView("graft_cf_lineitem")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_cf_orders")
         val opc = Iterate.ckpt(s.sql(cfOpcSql("graft_cf_lineitem")))
         opc.createOrReplaceTempView("graft_cf_opc")
         val owned = Iterate.ckpt(s.sql(
@@ -253,9 +251,9 @@ object Training103 {
     QueryDef(
       "q471_tiered_billing",
       (s, d) => {
-        t(s, d, "lineitem").createOrReplaceTempView("graft_tb_lineitem")
-        t(s, d, "orders").createOrReplaceTempView("graft_tb_orders")
-        t(s, d, "customer").createOrReplaceTempView("graft_tb_customer")
+        Tables(s, d, "lineitem").createOrReplaceTempView("graft_tb_lineitem")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_tb_orders")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_tb_customer")
         s.sql(billingSql(spark = true,
           "graft_tb_lineitem", "graft_tb_orders", "graft_tb_customer"))
       },

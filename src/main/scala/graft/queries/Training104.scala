@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -29,8 +29,6 @@ import graft.plans.InListToJoinRewrite
   *    integer mapping; per-image Σg' and Σg'² pin the whole remap.
   */
 object Training104 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   // 64 distinct part keys present at every SF (ids 1..197)
   private[queries] val inKeys: Seq[Int] = (1 to 64).map(i => (i * 3) % 197 + 1)
 
@@ -85,7 +83,7 @@ object Training104 {
         if (!s.experimental.extraOptimizations.contains(InListToJoinRewrite))
           s.experimental.extraOptimizations =
             s.experimental.extraOptimizations :+ InListToJoinRewrite
-        t(s, d, "lineitem").createOrReplaceTempView("graft_il_lineitem")
+        Tables(s, d, "lineitem").createOrReplaceTempView("graft_il_lineitem")
         s.sql(inListSql("graft_il_lineitem"))
       },
       Some(inListSql("lineitem"))),
@@ -95,7 +93,7 @@ object Training104 {
       (s, d) => {
         import s.implicits._
         import graft.operators.BmpCodec
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(col("doc_id")).as[Long]
           .map { id =>
             val did = id % 1000000L

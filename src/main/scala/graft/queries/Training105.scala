@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.{QueryDef, Tables}
 
@@ -31,8 +31,6 @@ import graft.{QueryDef, Tables}
   *    so the hash gate proves the rewrite identity.
   */
 object Training105 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   // ---------------------------------------------------------------- q475
 
   private def luhnSql(spark: Boolean, custRel: String): String = {
@@ -158,7 +156,7 @@ object Training105 {
     QueryDef(
       "q475_luhn_validation",
       (s, d) => {
-        t(s, d, "customer").createOrReplaceTempView("graft_lu_customer")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_lu_customer")
         s.sql(luhnSql(spark = true, "graft_lu_customer"))
       },
       Some(luhnSql(spark = false, "customer"))),
@@ -166,7 +164,7 @@ object Training105 {
     QueryDef(
       "q476_si_conflict_sweep",
       (s, d) => {
-        t(s, d, "events").createOrReplaceTempView("graft_si_events")
+        Tables(s, d, "events").createOrReplaceTempView("graft_si_events")
         s.sql(siSweepSql(spark = true, "graft_si_events"))
       },
       Some(siSweepSql(spark = false, "events"))),
@@ -174,8 +172,8 @@ object Training105 {
     QueryDef(
       "q477_decorrelated_q17",
       (s, d) => {
-        t(s, d, "lineitem").createOrReplaceTempView("graft_q17_lineitem")
-        t(s, d, "part").createOrReplaceTempView("graft_q17_part")
+        Tables(s, d, "lineitem").createOrReplaceTempView("graft_q17_lineitem")
+        Tables(s, d, "part").createOrReplaceTempView("graft_q17_part")
         s.sql(q17RewriteSql("graft_q17_lineitem", "graft_q17_part"))
       },
       Some(q17CorrelatedSql("lineitem", "part"))),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.{QueryDef, Tables}
 
@@ -25,8 +25,6 @@ import graft.{QueryDef, Tables}
   *    input to the q338 encoding planner's integer-column decision.
   */
 object Training106 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   // ---------------------------------------------------------------- q478
 
   private def isoWeekSql(spark: Boolean, ordersRel: String): String = {
@@ -148,7 +146,7 @@ object Training106 {
     QueryDef(
       "q478_iso_week_census",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_iw_orders")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_iw_orders")
         s.sql(isoWeekSql(spark = true, "graft_iw_orders"))
       },
       Some(isoWeekSql(spark = false, "orders"))),
@@ -156,7 +154,7 @@ object Training106 {
     QueryDef(
       "q479_hampel_filter",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_hp_orders")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_hp_orders")
         s.sql(hampelSql(spark = true, "graft_hp_orders"))
       },
       Some(hampelSql(spark = false, "orders"))),
@@ -164,9 +162,9 @@ object Training106 {
     QueryDef(
       "q480_varint_delta_size",
       (s, d) => {
-        t(s, d, "documents").createOrReplaceTempView("graft_vi_documents")
-        t(s, d, "events").createOrReplaceTempView("graft_vi_events")
-        t(s, d, "orders").createOrReplaceTempView("graft_vi_orders")
+        Tables(s, d, "documents").createOrReplaceTempView("graft_vi_documents")
+        Tables(s, d, "events").createOrReplaceTempView("graft_vi_events")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_vi_orders")
         s.sql(varintSql(spark = true,
           "graft_vi_documents", "graft_vi_events", "graft_vi_orders"))
       },

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.{QueryDef, Tables}
 
@@ -28,8 +28,6 @@ import graft.{QueryDef, Tables}
   *    three in the spec.
   */
 object Training107 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   // Monday anchor: 1970-01-05
   private def busDaysTo(spark: Boolean, col: String): String = {
     val n =
@@ -129,8 +127,8 @@ object Training107 {
     QueryDef(
       "q481_business_days",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_bd_orders")
-        t(s, d, "lineitem").createOrReplaceTempView("graft_bd_lineitem")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_bd_orders")
+        Tables(s, d, "lineitem").createOrReplaceTempView("graft_bd_lineitem")
         s.sql(busDaySql(spark = true, "graft_bd_orders", "graft_bd_lineitem"))
       },
       Some(busDaySql(spark = false, "orders", "lineitem"))),
@@ -138,7 +136,7 @@ object Training107 {
     QueryDef(
       "q482_fiscal_445",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_fy_orders")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_fy_orders")
         s.sql(fiscal445Sql(spark = true, "graft_fy_orders"))
       },
       Some(fiscal445Sql(spark = false, "orders"))),
@@ -146,7 +144,7 @@ object Training107 {
     QueryDef(
       "q483_cron_expansion",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_cr_orders")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_cr_orders")
         s.sql(cronSql(spark = true, "graft_cr_orders"))
       },
       Some(cronSql(spark = false, "orders"))),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.{Iterate, QueryDef, Tables}
 
@@ -29,8 +29,6 @@ import graft.{Iterate, QueryDef, Tables}
   *    spec re-proves by scanning EVERY candidate stock.
   */
 object Training108 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   // ---------------------------------------------------------------- q484
 
   private def drfBaseSql(spark: Boolean, ordersRel: String, custRel: String): String = {
@@ -145,8 +143,8 @@ object Training108 {
     QueryDef(
       "q484_drf_allocation",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_drf_orders")
-        t(s, d, "customer").createOrReplaceTempView("graft_drf_customer")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_drf_orders")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_drf_customer")
         var state = Iterate.ckpt(s.sql(
           s"""WITH ${drfBaseSql(spark = true, "graft_drf_orders", "graft_drf_customer")}
               SELECT seg, dcpu, dmem, CAST(0 AS BIGINT) AS cpu,
@@ -181,7 +179,7 @@ object Training108 {
     QueryDef(
       "q485_knapsack_dp",
       (s, d) => {
-        t(s, d, "part").createOrReplaceTempView("graft_ks_part")
+        Tables(s, d, "part").createOrReplaceTempView("graft_ks_part")
         val base = ksBaseSql(spark = true, "graft_ks_part")
         val items = Iterate.ckpt(s.sql(s"WITH $base SELECT * FROM items").coalesce(1))
         items.createOrReplaceTempView("items")
@@ -206,8 +204,8 @@ object Training108 {
     QueryDef(
       "q486_newsvendor_quantile",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_nv_orders")
-        t(s, d, "customer").createOrReplaceTempView("graft_nv_customer")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_nv_orders")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_nv_customer")
         s.sql(nvSql(spark = true, "graft_nv_orders", "graft_nv_customer"))
       },
       Some(nvSql(spark = false, "orders", "customer"))),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, min}
 
 import graft.{Iterate, QueryDef, Tables}
@@ -26,8 +26,6 @@ import graft.operators.{EquiDepthBins, TextOps}
   *    replay + the safety-definition law in the spec.
   */
 object Training109 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   // ---------------------------------------------------------------- q487
 
   /** 31 equi-depth bounds from the deterministic 1-in-97 key sample. */
@@ -123,7 +121,7 @@ object Training109 {
     QueryDef(
       "q487_range_partitioner_balance",
       (s, d) => {
-        t(s, d, "lineitem").createOrReplaceTempView("graft_rp_lineitem")
+        Tables(s, d, "lineitem").createOrReplaceTempView("graft_rp_lineitem")
         // the 1-in-97 sample is a constant FRACTION of the keys (still
         // data-sized at 100 TB), so its rank comes from the two-phase
         // ScalableRank, not rpBoundsSql's global window (which stays as
@@ -176,8 +174,8 @@ object Training109 {
     QueryDef(
       "q488_bankers_safety",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_bk_orders")
-        t(s, d, "customer").createOrReplaceTempView("graft_bk_customer")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_bk_orders")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_bk_customer")
         var state = Iterate.ckpt(s.sql(
           s"""WITH ${bankBaseSql(spark = true, "graft_bk_orders", "graft_bk_customer")}
               SELECT seg, acpu, amem, needc, needm, 0 AS released

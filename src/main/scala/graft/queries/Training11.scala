@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,8 +26,6 @@ import graft.{QueryDef, Tables}
   * vocabulary cut, seven weekdays) — never over raw rows.
   */
 object Training11 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- Spearman rank correlation between order value and order
@@ -41,10 +39,10 @@ object Training11 {
     QueryDef(
       "q174_spearman",
       (s, d) => {
-        val items = t(s, d, "lineitem")
+        val items = Tables(s, d, "lineitem")
           .groupBy(col("l_orderkey").as("okey"))
           .agg(count(lit(1)).as("v"))
-        val ord = t(s, d, "orders")
+        val ord = Tables(s, d, "orders")
           .select(col("o_orderkey").as("okey"),
             expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("u"))
           .join(items, "okey")
@@ -118,7 +116,7 @@ object Training11 {
     QueryDef(
       "q175_anova_f",
       (s, d) =>
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .select(col("o_orderpriority").as("g"),
             expr("CAST(round(o_totalprice, 0) AS BIGINT)").as("x"))
           .groupBy("g")
@@ -171,7 +169,7 @@ object Training11 {
     QueryDef(
       "q176_ab_test",
       (s, d) =>
-        t(s, d, "events")
+        Tables(s, d, "events")
           .select(
             (expr("CAST(datediff(CAST(ts AS DATE), DATE '1970-01-01') AS BIGINT)")
               + lit(4L)).mod(lit(7L)).isin(0L, 6L).as("weekend"),
@@ -220,7 +218,7 @@ object Training11 {
     QueryDef(
       "q177_concentration",
       (s, d) => {
-        val rev = t(s, d, "lineitem")
+        val rev = Tables(s, d, "lineitem")
           .groupBy(col("l_suppkey").as("sk"))
           .agg(sum(expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)")).as("c"))
           .localCheckpoint(true) // rank pass + ntot scalar share one scan
@@ -283,7 +281,7 @@ object Training11 {
     QueryDef(
       "q178_zipf_slope",
       (s, d) => {
-        val top = t(s, d, "documents")
+        val top = Tables(s, d, "documents")
           .select(explode(split(col("text"), " ")).as("word"))
           .filter(col("word") =!= "")
           .groupBy("word")
@@ -352,7 +350,7 @@ object Training11 {
     QueryDef(
       "q179_dow_profile",
       (s, d) => {
-        val daily = t(s, d, "events")
+        val daily = Tables(s, d, "events")
           .select(expr("CAST(datediff(CAST(ts AS DATE), DATE '1970-01-01') AS BIGINT)").as("day"))
           .groupBy("day").agg(count(lit(1)).as("c"))
           .select(((col("day") + lit(4L)) % lit(7L)).as("dow"), col("c"))
@@ -395,7 +393,7 @@ object Training11 {
     QueryDef(
       "q180_dataset_card",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val base = docs.groupBy(col("source"))
           .agg(
             count(lit(1)).as("docs"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -26,8 +26,6 @@ import graft.operators.EquiDepthBins
   *                   headroom), pinned TRUE.
   */
 object Training110 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
@@ -35,7 +33,7 @@ object Training110 {
       (s, d) => {
         val lo = 2000000L; val hi = 6000000L
         val qs = (1 to 63).map(i => i / 64.0).mkString(", ")
-        val v = t(s, d, "lineitem")
+        val v = Tables(s, d, "lineitem")
           .selectExpr("CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS v")
           .localCheckpoint() // boundary sketch, summary, and witness read it
         // ONE mergeable sketch agg (integer input ⇒ approx_percentile

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -21,8 +21,6 @@ import graft.{QueryDef, Tables}
   *    sketch-contract discipline), never sketch outputs.
   */
 object Training111 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
@@ -30,7 +28,7 @@ object Training111 {
       (s, d) => {
         import graft.operators.IqrOutlierFilter
         val cols = Seq("l_quantity", "l_extendedprice")
-        val li = t(s, d, "lineitem")
+        val li = Tables(s, d, "lineitem")
           .select("l_orderkey", "l_linenumber", "l_returnflag",
             "l_quantity", "l_extendedprice")
           .localCheckpoint() // exact filter, approx filter, rank audit all read it

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -22,8 +22,6 @@ import graft.{QueryDef, Tables}
   *    replays THIS query from q85's exact output at harness scale.
   */
 object Training112 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
@@ -34,7 +32,7 @@ object Training112 {
         // one events scan: the click stream and the purchase probes both
         // read this materialized 3-column projection (a per-branch scan
         // would re-read the fact source once per side)
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .filter(col("event_type").isin("click", "purchase"))
           .select(col("event_type"), col("event_id"),
             unix_micros(col("ts")).as("t"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -26,8 +26,6 @@ import graft.operators.TextOps._
   * classes, 3 splits, 5 event types).
   */
 object Training12 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** q113's hash-stable split label, as an expression over an id column
     * — the same md5-derived 60-bit hash both engines compute, so split
     * assignment is a pure function of doc_id everywhere.
@@ -102,7 +100,7 @@ object Training12 {
     QueryDef(
       "q181_ess_weights",
       (s, d) =>
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(col("source"),
             expr("least(10L, greatest(1L, n_chars div 100))").as("w"))
           .groupBy("source")
@@ -139,7 +137,7 @@ object Training12 {
     QueryDef(
       "q182_vocab_overlap",
       (s, d) => {
-        val sw = t(s, d, "documents")
+        val sw = Tables(s, d, "documents")
           .select(col("source"), explode(split(col("text"), " ")).as("word"))
           .filter(col("word") =!= "")
           .distinct()
@@ -190,7 +188,7 @@ object Training12 {
       (s, d) => {
         import graft.operators.Dedup
         Dedup.minhashCandidatePairs(
-          Dedup.minhashBands(t(s, d, "documents"), "doc_id", "text"), "doc_id")
+          Dedup.minhashBands(Tables(s, d, "documents"), "doc_id", "text"), "doc_id")
           .select(
             expr(splitSpark("doc_id_a")).as("sa"),
             expr(splitSpark("doc_id_b")).as("sb"))
@@ -242,7 +240,7 @@ object Training12 {
     QueryDef(
       "q184_lang_kappa",
       (s, d) => {
-        val conf = langGuessed(t(s, d, "documents"))
+        val conf = langGuessed(Tables(s, d, "documents"))
           .groupBy("lang", "lang_guess").agg(count(lit(1)).as("c"))
           .localCheckpoint() // tiny (≤ classes²); reused by four aggs below
         val nF = conf.agg(sum("c").as("n"))
@@ -288,7 +286,7 @@ object Training12 {
     QueryDef(
       "q185_lang_prf",
       (s, d) => {
-        val conf = langGuessed(t(s, d, "documents"))
+        val conf = langGuessed(Tables(s, d, "documents"))
           .groupBy("lang", "lang_guess").agg(count(lit(1)).as("c"))
           .localCheckpoint()
         val actual = conf.groupBy(col("lang").as("cls")).agg(sum("c").as("n_actual"))
@@ -351,7 +349,7 @@ object Training12 {
     QueryDef(
       "q186_event_dispersion",
       (s, d) =>
-        t(s, d, "events")
+        Tables(s, d, "events")
           .groupBy(col("event_type"), col("user_id"))
           .agg(count(lit(1)).as("c"))
           .groupBy("event_type")

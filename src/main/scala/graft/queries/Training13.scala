@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,8 +21,6 @@ import graft.operators.TextOps.{hash60Duck, hash60Spark}
   * integer ppm or an exact integer difference.
   */
 object Training13 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** Poisson(1) CDF thresholds scaled to 1e6 (e^-1-derived, rounded):
     * hash60 % 1e6 < 367879 → 0 copies, < 735759 → 1, < 919699 → 2,
     * < 981012 → 3, else 4. Mean multiplier ≈ 1.0004 — the Poisson
@@ -46,7 +44,7 @@ object Training13 {
     QueryDef(
       "q187_bootstrap_ci",
       (s, d) => {
-        val reps = t(s, d, "orders")
+        val reps = Tables(s, d, "orders")
           .select(col("o_orderkey"),
             expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("x"))
           .select(col("o_orderkey"), col("x"), explode(expr("sequence(0, 19)")).as("b"))
@@ -60,7 +58,7 @@ object Training13 {
             expr("(2 * sx + sm) div (2 * nullif(sm, 0))").as("mean_b"))
         val ranked = reps.withColumn("rk",
           row_number().over(Window.orderBy(col("mean_b").asc, col("b").asc)))
-        val global = t(s, d, "orders")
+        val global = Tables(s, d, "orders")
           .agg(
             count(lit(1)).as("n_orders"),
             expr("(2 * sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) + count(*)) div (2 * count(*))")
@@ -108,7 +106,7 @@ object Training13 {
     QueryDef(
       "q188_ewma_spikes",
       (s, d) => {
-        val daily = t(s, d, "lineitem")
+        val daily = Tables(s, d, "lineitem")
           .select(
             expr("CAST(datediff(CAST(l_shipdate AS DATE), DATE '1970-01-01') AS BIGINT)").as("day"),
             expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("c"))
@@ -157,7 +155,7 @@ object Training13 {
     QueryDef(
       "q189_jackknife_influence",
       (s, d) => {
-        val per = t(s, d, "documents")
+        val per = Tables(s, d, "documents")
           .groupBy("source")
           .agg(count(lit(1)).as("ng"), sum("n_chars").as("sg"))
         val tot = per.agg(sum("ng").as("n"), sum("sg").as("s"))
@@ -191,7 +189,7 @@ object Training13 {
     QueryDef(
       "q190_length_log2_hist",
       (s, d) =>
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(col("lang"),
             expr("length(conv(n_chars, 10, 2))").as("log2_bucket"))
           .groupBy("lang", "log2_bucket")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -22,8 +22,6 @@ import graft.operators.TextOps._
   * implementation of it.
   */
 object Training14 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** q46's candidate CTE chain (bands + bucket cap), ending in
     * `pairs(doc_a, doc_b)`.
     */
@@ -78,7 +76,7 @@ object Training14 {
     QueryDef(
       "q191_minhash_pr",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val cand = Dedup.minhashCandidatePairs(
           Dedup.minhashBands(docs, "doc_id", "text"), "doc_id")
           .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
@@ -128,7 +126,7 @@ object Training14 {
     QueryDef(
       "q192_shingle_df_hist",
       (s, d) =>
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .withColumn("__wh", expr(wordHashesSpark("text")))
           .select(explode(expr(ngramHashesSpark(3, "__wh"))).as("h"))
           .groupBy("h").agg(count(lit(1)).as("df"))
@@ -161,7 +159,7 @@ object Training14 {
     QueryDef(
       "q193_band_occupancy",
       (s, d) => {
-        val bands = Dedup.minhashBands(t(s, d, "documents"), "doc_id", "text")
+        val bands = Dedup.minhashBands(Tables(s, d, "documents"), "doc_id", "text")
         val bandCols = bands.columns.filter(_.startsWith("band"))
         bands
           .select(col("doc_id"),

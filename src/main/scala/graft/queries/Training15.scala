@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,8 +32,6 @@ import graft.operators.TextOps.{hash60Duck, hash60Spark}
   * whose key comparison is collation-aware codegen.
   */
 object Training15 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** Rendezvous (highest-random-weight) score packed into one BIGINT:
     * 55-bit hash of (id '#' shard) in the high bits, shard id in the
     * low 4, so arg-max-by-hash = max of the packed value, tie-free and
@@ -61,7 +59,7 @@ object Training15 {
     QueryDef(
       "q194_shard_rendezvous",
       (s, d) =>
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(
             expr(hrwSpark("doc_id", 8)).as("shard"),
             expr(hrwSpark("doc_id", 9)).as("__shard9"),
@@ -94,7 +92,7 @@ object Training15 {
     QueryDef(
       "q195_collation_group",
       (s, d) =>
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(
             col("doc_id"),
             expr("""collate(CASE WHEN doc_id % 2 = 0 THEN upper(source)
@@ -126,7 +124,7 @@ object Training15 {
     QueryDef(
       "q196_compaction_plan",
       (s, d) => {
-        val files = t(s, d, "lineitem")
+        val files = Tables(s, d, "lineitem")
           .groupBy((col("l_orderkey") / 100).cast("long").as("file_id"))
           .agg(count(lit(1)).as("n_rows"))
         graft.operators.ScalableRank
@@ -168,7 +166,7 @@ object Training15 {
     QueryDef(
       "q197_welford_merge",
       (s, d) => {
-        val st = t(s, d, "documents")
+        val st = Tables(s, d, "documents")
           .groupBy("source")
           .agg(
             count(lit(1)).as("n"),
@@ -217,7 +215,7 @@ object Training15 {
     QueryDef(
       "q198_rolling_corr",
       (s, d) => {
-        val daily = t(s, d, "orders")
+        val daily = Tables(s, d, "orders")
           .groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
           .agg(
             count(lit(1)).as("x"),

@@ -28,8 +28,6 @@ import graft.{QueryDef, Tables}
   * (<=> hashes NULL as a real key: every null row co-locates).
   */
 object Training16 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** q200's lazy plan plus a conf-restore thunk. The default recursion
     * working-set guard (1M rows across all iterations) trips on any
     * real table: every part emits depth+1 frontier rows, so a 200k-part
@@ -46,7 +44,7 @@ object Training16 {
     */
   private[graft] def q200Plan(s: SparkSession, d: String,
       nParts: Long = -1L): (DataFrame, () => Unit) = {
-    val parts = t(s, d, "part")
+    val parts = Tables(s, d, "part")
     val n = if (nParts >= 0) nParts else parts.count()
     val bound = (n + 1000L) * 12L // ≤12 decimal digits/key
     val prev = s.conf.getOption("spark.sql.cteRecursionRowLimit")
@@ -101,8 +99,8 @@ object Training16 {
     QueryDef(
       "q199_lateral_topk",
       (s, d) => {
-        t(s, d, "nation").createOrReplaceTempView("graft_nation_lat")
-        t(s, d, "customer").createOrReplaceTempView("graft_customer_lat")
+        Tables(s, d, "nation").createOrReplaceTempView("graft_nation_lat")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_customer_lat")
         s.sql("""
           SELECT n.n_name, c.c_custkey, c.c_acctbal
           FROM graft_nation_lat n,
@@ -138,7 +136,7 @@ object Training16 {
         // (the recursion costs a shuffle + plan round per key digit).
         // Equality is exact, not approximate, so flipping the branch
         // can never change the output (KeyHierarchySpec pins both).
-        val parts = t(s, d, "part")
+        val parts = Tables(s, d, "part")
         val limit = s.conf.getOption("spark.graft.hierarchy.recursionLimit")
           .map(_.toLong).getOrElse(100000L)
         val nParts = parts.count() // shared by the dispatch AND the row-limit bound
@@ -176,7 +174,7 @@ object Training16 {
       (s, d) => {
         val winUs = 1800000000L // 30 min
         val ord = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
             col("event_id"))
           .withColumn("end_us", col("ts_us") + winUs)
@@ -229,7 +227,7 @@ object Training16 {
     QueryDef(
       "q202_listagg_top_langs",
       (s, d) => {
-        val counts = t(s, d, "documents")
+        val counts = Tables(s, d, "documents")
           .groupBy("source", "lang").agg(count(lit(1)).as("cnt"))
         counts
           .withColumn("rk", row_number().over(
@@ -267,7 +265,7 @@ object Training16 {
     QueryDef(
       "q203_try_arithmetic",
       (s, d) =>
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .withColumn("markup",
             expr("round(try_divide(l_extendedprice, l_quantity - 1), 6)"))
           .groupBy("l_returnflag")
@@ -303,7 +301,7 @@ object Training16 {
     QueryDef(
       "q204_nullsafe_join",
       (s, d) => {
-        val keyed = t(s, d, "customer")
+        val keyed = Tables(s, d, "customer")
           .withColumn("k", expr("nullif(c_nationkey % 5, 4)"))
         val even = keyed.where(col("c_custkey") % 2 === 0)
           .groupBy("k").agg(count(lit(1)).as("n_even"))

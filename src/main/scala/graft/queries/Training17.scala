@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,8 +29,6 @@ import graft.operators.TextOps.{lshPairsCtesDuck, ngramHashesDuck, wordHashesDuc
   * self-join and it is 5× thinner than q47's at τ=0.8.
   */
 object Training17 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- sequence-gap census over the click event-id stream: how many
@@ -43,7 +41,7 @@ object Training17 {
     QueryDef(
       "q205_sequence_gaps",
       (s, d) => {
-        val ids = t(s, d, "events")
+        val ids = Tables(s, d, "events")
           .where(col("event_type") === "click")
           .select(col("event_id").as("id"))
         val st = ids.agg(
@@ -85,7 +83,7 @@ object Training17 {
       "q206_time_weighted_avg",
       (s, d) => {
         val ord = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-        t(s, d, "events")
+        Tables(s, d, "events")
           .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
             col("event_id"),
             expr("CAST(round(value * 1000000) AS BIGINT)").as("v_micro"))
@@ -128,7 +126,7 @@ object Training17 {
       "q207_cross_source_neardup",
       (s, d) => {
         import graft.operators.Dedup
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val pairs = Dedup.minhashCandidatePairs(
           Dedup.minhashBands(docs, "doc_id", "text"), "doc_id")
           .withColumnRenamed("doc_id_a", "doc_a")
@@ -183,7 +181,7 @@ object Training17 {
         // similarity is then over the df≤cap shingle space, prefix
         // lengths included (sizes are post-cap, so the τ-prefix bound
         // stays lossless w.r.t. that space).
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
           .withColumn("__wh", expr(TextOps.wordHashesSpark("text")))
           .select(col("doc_id"),
             expr(TextOps.ngramHashesSpark(3, "__wh")).as("__ngrams"))

@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.Tables.embDouble
 import graft.operators.{Similarity, VectorOps}
 
 /** Eighteenth wave: second-stage retrieval — the operators between "ANN
@@ -29,12 +30,7 @@ import graft.operators.{Similarity, VectorOps}
   * needed for cross-engine equality.
   */
 object Training18 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   private val DIM = 64
-
-  private def embDouble(df: DataFrame): DataFrame =
-    df.withColumn("vec", expr("transform(embedding, x -> cast(x as double))"))
 
   /** Cosine over array<double> with `tag`-suffixed lambda variables so
     * the expression can nest inside outer higher-order functions
@@ -65,7 +61,7 @@ object Training18 {
     QueryDef(
       "q209_maxsim_late_interaction",
       (s, d) => {
-        val emb = embDouble(t(s, d, "embeddings"))
+        val emb = embDouble(Tables(s, d, "embeddings"))
           .withColumn("__subs", expr(subsSpark("vec")))
           .select(col("vec_id"), col("__subs"))
         val q = emb.filter(col("vec_id") < 10)
@@ -112,7 +108,7 @@ object Training18 {
     QueryDef(
       "q210_mutual_knn",
       (s, d) => {
-        val emb = embDouble(t(s, d, "embeddings"))
+        val emb = embDouble(Tables(s, d, "embeddings"))
         // materialize the top-k list once: both sides of the reciprocal
         // join read it, and re-deriving it would run the scoring pass
         // twice (the expensive stage of the whole query).
@@ -159,7 +155,7 @@ object Training18 {
     QueryDef(
       "q211_rocchio_rerank",
       (s, d) => {
-        val emb = embDouble(t(s, d, "embeddings")).select("vec_id", "vec")
+        val emb = embDouble(Tables(s, d, "embeddings")).select("vec_id", "vec")
         val queries = emb.filter(col("vec_id") < 10)
         val top = Similarity.bruteForceTopK(queries, emb, "vec_id", "vec", k = 3)
         val cent = top
@@ -226,8 +222,8 @@ object Training18 {
     QueryDef(
       "q212_knn_label_audit",
       (s, d) => {
-        val emb = embDouble(t(s, d, "embeddings"))
-        val labels = t(s, d, "embeddings").select(col("vec_id"), col("label"))
+        val emb = embDouble(Tables(s, d, "embeddings"))
+        val labels = Tables(s, d, "embeddings").select(col("vec_id"), col("label"))
         // SCALE-DISPATCHED by corpus size (see q210): exact below the
         // brute limit — the harness regime, oracle unchanged — IVF above.
         val top = Similarity.autoTopK(emb, "vec_id", "vec", lit(true), k = 3)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,8 +25,6 @@ import graft.{QueryDef, Tables}
   * shuffles both sides on the order key once.
   */
 object Training19 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- min/max pruning simulation: slab lineitem into ~100-order
@@ -44,7 +42,7 @@ object Training19 {
         // slab stats are metadata-sized (|orders|/100 rows): materialize
         // once so the anchor lookup and the probe join don't re-run the
         // data-sized agg.
-        val stats = t(s, d, "lineitem")
+        val stats = Tables(s, d, "lineitem")
           .groupBy((col("l_orderkey") / 100).cast("long").as("file_id"))
           .agg(
             min(col("l_shipdate").cast("date")).as("d_min"),
@@ -103,7 +101,7 @@ object Training19 {
       "q214_event_runs",
       (s, d) => {
         val ord = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-        val runs = t(s, d, "events")
+        val runs = Tables(s, d, "events")
           .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
             col("event_id"), col("event_type"))
           .withColumn("prev", lag("event_type", 1).over(ord))
@@ -158,7 +156,7 @@ object Training19 {
       "q215_constrained_funnel",
       (s, d) => {
         val hourUs = 3600000000L
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .select(col("user_id"), col("event_type"),
             unix_micros(col("ts")).as("ts_us"))
         val v = ev.where(col("event_type") === "view")
@@ -217,14 +215,14 @@ object Training19 {
     QueryDef(
       "q216_price_audit",
       (s, d) => {
-        val lines = t(s, d, "lineitem")
+        val lines = Tables(s, d, "lineitem")
           .select(col("l_orderkey").as("o_orderkey"),
             expr("""CAST(round(l_extendedprice * (1 - l_discount)
                                * (1 + l_tax) * 100) AS BIGINT)""")
               .as("line_cents"))
           .groupBy("o_orderkey")
           .agg(sum("line_cents").as("lines_cents"))
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .select(col("o_orderkey"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("hdr_cents"))
           .join(lines, Seq("o_orderkey"), "left")

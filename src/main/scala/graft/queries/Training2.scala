@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -19,8 +19,6 @@ import graft.operators.VectorOps._
   * cosine → 4 dp), so every query here is driver-oracled.
   */
 object Training2 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- SemDedup: k-means-bucketed semantic near-dup removal over the
@@ -33,7 +31,7 @@ object Training2 {
       "q100_semantic_dedup",
       (s, d) =>
         Similarity.semanticDedup(
-          t(s, d, "embeddings"), "vec_id", "embedding",
+          Tables(s, d, "embeddings"), "vec_id", "embedding",
           k = 8, iters = 3, threshold = 0.35),
       Some {
         val ctes = DeterministicKMeans.assignmentsDuckCtes(
@@ -63,7 +61,7 @@ object Training2 {
     QueryDef(
       "q101_tfidf_topterms",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val tf = docs
           .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
           .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -104,7 +102,7 @@ object Training2 {
     QueryDef(
       "q102_bigram_pairs",
       (s, d) =>
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(explode(expr(
             """CASE WHEN size(split(text, ' ')) >= 2 THEN
                  transform(sequence(1, size(split(text, ' ')) - 1),
@@ -134,7 +132,7 @@ object Training2 {
     QueryDef(
       "q103_embedding_quantize",
       (s, d) =>
-        t(s, d, "embeddings")
+        Tables(s, d, "embeddings")
           .select(col("vec_id"), expr(microVecSpark("embedding")).as("__v6"))
           .withColumn("__m",
             greatest(expr("array_max(transform(__v6, x -> abs(x)))"), lit(1L)))
@@ -174,7 +172,7 @@ object Training2 {
     QueryDef(
       "q104_incremental_dedup",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         def stackedBands(f: DataFrame, as: String) =
           Dedup.minhashBands(f, "doc_id", "text")
             .select(col("doc_id").as(as),

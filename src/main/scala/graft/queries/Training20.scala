@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,8 +27,6 @@ import graft.operators.TextOps.{hash60Duck, hash60Spark}
   * |strata| table; q220 is one full-outer shuffle join on the key.
   */
 object Training20 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- vocabulary coverage curve: share of total token mass covered
@@ -39,7 +37,7 @@ object Training20 {
     QueryDef(
       "q217_vocab_coverage",
       (s, d) => {
-        val vocab = t(s, d, "documents")
+        val vocab = Tables(s, d, "documents")
           .select(explode(split(col("text"), " ")).as("word"))
           .groupBy("word").agg(count(lit(1)).as("n"))
           .localCheckpoint(true) // rank pass + totals share one explode
@@ -99,8 +97,8 @@ object Training20 {
       (s, d) => {
         def slice(df: DataFrame, key: String) =
           df.where(expr(s"${hash60Spark(s"cast($key as string)")} % 16 = 0"))
-        val o = t(s, d, "orders").select("o_custkey")
-        val c = t(s, d, "customer").select("c_custkey")
+        val o = Tables(s, d, "orders").select("o_custkey")
+        val c = Tables(s, d, "customer").select("c_custkey")
         val nTrue = o.join(c, col("o_custkey") === col("c_custkey"))
           .agg(count(lit(1)).as("n_true"))
         val nSamp = slice(o, "o_custkey")
@@ -143,7 +141,7 @@ object Training20 {
     QueryDef(
       "q219_neyman_allocation",
       (s, d) => {
-        val st = t(s, d, "customer")
+        val st = Tables(s, d, "customer")
           .select(col("c_mktsegment").as("segment"),
             expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("cents"))
           .groupBy("segment")
@@ -215,7 +213,7 @@ object Training20 {
     QueryDef(
       "q220_snapshot_diff",
       (s, d) => {
-        val base = t(s, d, "orders")
+        val base = Tables(s, d, "orders")
           .select(col("o_orderkey").as("k"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
         val v1 = base.where(col("k") % 7 =!= 0)

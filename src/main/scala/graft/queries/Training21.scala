@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -23,8 +23,6 @@ import graft.{QueryDef, Tables}
   * global window anywhere.
   */
 object Training21 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- conjunctive search over an inverted index: documents whose
@@ -38,7 +36,7 @@ object Training21 {
       "q221_conjunctive_search",
       (s, d) => {
         val terms = Seq("join", "merge", "window")
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val hits = docs
           .select(col("doc_id"),
             explode(array_distinct(split(col("text"), " "))).as("w"))
@@ -73,7 +71,7 @@ object Training21 {
       "q222_source_decile_mix",
       (s, d) => {
         val probs = (1 until 10).map(_ / 10.0).mkString("array(", ", ", ")")
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
           .select(col("source"), col("n_chars").cast("double").as("v"))
         val bounds = docs.agg(expr(
           s"transform(percentile(v, $probs), b -> round(b, 6))")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,8 +25,6 @@ import graft.{QueryDef, Tables}
   * window pass.
   */
 object Training22 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- common-neighbor Jaccard link prediction: undirected
@@ -65,7 +63,7 @@ object Training22 {
       (s, d) => {
         // shared localCheckpoint'd edge build — und + deg + wedges all
         // read it (graft.operators.Graphs.coPurchaseEdges)
-        val e = graft.operators.Graphs.coPurchaseEdges(t(s, d, "lineitem"))
+        val e = graft.operators.Graphs.coPurchaseEdges(Tables(s, d, "lineitem"))
         val und = graft.operators.Graphs.doubled(e)
         // SCALE-DISPATCHED (round-8): the operator measures Σ deg(w)²
         // with the scalar agg it needs anyway to size the pair shuffle
@@ -110,7 +108,7 @@ object Training22 {
       "q224_disorder_profile",
       (s, d) => {
         val arrival = Window.partitionBy("user_id").orderBy("event_id")
-        t(s, d, "events")
+        Tables(s, d, "events")
           .select(col("user_id"), col("event_id"),
             unix_micros(col("ts")).as("ts_us"))
           .withColumn("run_max",

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,8 +24,6 @@ import graft.operators.TextOps.{hash60Duck, hash60Spark}
   * TakeOrdered — no global sort.
   */
 object Training23 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- feature hashing: segment × nation cross features hashed
@@ -37,7 +35,7 @@ object Training23 {
     QueryDef(
       "q225_feature_hashing",
       (s, d) => {
-        val feats = t(s, d, "customer")
+        val feats = Tables(s, d, "customer")
           .groupBy(col("c_mktsegment").as("seg"),
             col("c_nationkey").cast("long").as("nk"))
           .agg(count(lit(1)).as("n_rows"))
@@ -92,7 +90,7 @@ object Training23 {
     QueryDef(
       "q226_bottomk_sample_merge",
       (s, d) => {
-        val ranked = t(s, d, "documents")
+        val ranked = Tables(s, d, "documents")
           .select(col("doc_id"), col("source"),
             expr(s"${hash60Spark("cast(doc_id as string)")}").as("rk"))
         val direct = ranked.orderBy(col("rk"), col("doc_id")).limit(5)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,8 +22,6 @@ import graft.operators.{Dedup, TextOps}
   * cumulative window runs over ≤64 bit-length tiers.
   */
 object Training24 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- containment pairs at τ = 0.9: doc pairs where at least 90%
@@ -39,7 +37,7 @@ object Training24 {
     QueryDef(
       "q227_containment_pairs",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
           .withColumn("__wh", expr(TextOps.wordHashesSpark("text")))
           .select(col("doc_id"),
             expr(TextOps.ngramHashesSpark(3, "__wh")).as("__ngrams"))
@@ -94,7 +92,7 @@ object Training24 {
     QueryDef(
       "q228_budget_fill",
       (s, d) => {
-        val tiers = t(s, d, "documents")
+        val tiers = Tables(s, d, "documents")
           .select(
             expr("CAST(length(conv(n_chars, 10, 2)) AS BIGINT)").as("tier"),
             col("n_chars"))

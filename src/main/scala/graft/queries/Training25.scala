@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,8 +45,6 @@ import graft.sources.Sinks
   * format's `VERSION AS OF`, proving upserts never rewrite history.
   */
 object Training25 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** Verbatim oracle reuse from the brute-force twin — one definition,
     * zero drift (the q207 lesson).
     */
@@ -67,7 +66,7 @@ object Training25 {
   /** Corpus-as-queries IVF top-k: the candidate stage q229/q230 share. */
   private def ivfTopAll(s: SparkSession, d: String, k: Int): DataFrame = {
     val (nlist, nprobe) = annParams(s)
-    val emb = t(s, d, "embeddings")
+    val emb = Tables(s, d, "embeddings")
       .withColumn("vec", expr("transform(embedding, x -> cast(x as double))"))
     Similarity.ivfTopK(emb, "vec_id", "vec",
       queryFilter = lit(true), k = k, nlist = nlist, nprobe = nprobe)
@@ -101,7 +100,7 @@ object Training25 {
       "q230_knn_audit_ivf",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val labels = t(s, d, "embeddings").select(col("vec_id"), col("label"))
+        val labels = Tables(s, d, "embeddings").select(col("vec_id"), col("label"))
         val top = ivfTopAll(s, d, k = 3)
         val votes = top
           .join(labels.select(col("vec_id").as("cand_id"),
@@ -136,7 +135,7 @@ object Training25 {
     QueryDef(
       "q231_link_prediction_minhash",
       (s, d) => {
-        val e = graft.operators.Graphs.coPurchaseEdges(t(s, d, "lineitem"))
+        val e = graft.operators.Graphs.coPurchaseEdges(Tables(s, d, "lineitem"))
         val und = graft.operators.Graphs.doubled(e)
         // adjacency once: bands and both verify sides read it
         val adj = und.groupBy("u")
@@ -219,12 +218,8 @@ object Training25 {
           s"graft_timetravel_${Integer.toHexString(d.hashCode)}").toString
         // own scratch dir (name-spaced per sfDir): wipe for a
         // deterministic v0→v1 chain on every run
-        val rootFile = new java.io.File(root)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        if (rootFile.exists()) rm(rootFile)
-        val base = t(s, d, "orders")
+        FileUtils.deleteQuietly(new java.io.File(root))
+        val base = Tables(s, d, "orders")
           .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
           .withColumn("v", lit(0L))
         base.write.mode("overwrite").parquet(s"$root/v0")

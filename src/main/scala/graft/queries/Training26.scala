@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,19 +30,9 @@ import graft.sources.Sinks
   * must be re-runnable, and one that deletes history is not.
   */
 object Training26 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
-  private def wipe(root: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    val f = new java.io.File(root)
-    if (f.exists()) rm(f)
-  }
-
   /** Base orders projection + a literal version column. */
   private def ordersV(s: SparkSession, d: String, v: Long): DataFrame =
-    t(s, d, "orders")
+    Tables(s, d, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
       .withColumn("v", lit(v))
 
@@ -59,7 +50,8 @@ object Training26 {
         val root = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_cdc_${Integer.toHexString(d.hashCode)}").toString
-        wipe(root) // own scratch dir: deterministic v0→v1 chain per run
+        // own scratch dir: deterministic v0→v1 chain per run
+        FileUtils.deleteQuietly(new java.io.File(root))
         val base = ordersV(s, d, 0L)
         base.write.mode("overwrite").parquet(s"$root/v0")
         val updates = base
@@ -97,7 +89,7 @@ object Training26 {
         val root = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_ret_${Integer.toHexString(d.hashCode)}").toString
-        wipe(root)
+        FileUtils.deleteQuietly(new java.io.File(root))
         val base = ordersV(s, d, 0L)
         base.write.mode("overwrite").parquet(s"$root/v0")
         Sinks.mergeSnapshot(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -32,8 +32,6 @@ import graft.operators.TextOps.{hash60Duck, hash60Spark}
   * accumulation, `Num.dsum`-style exact sums).
   */
 object Training27 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** splitmix64 finalizer — the plan-time seed for q236's sign matrix.
     * Computed once in Scala; BOTH the Spark expression and the DuckDB
     * oracle embed the resulting literals, so the two sides cannot
@@ -101,7 +99,7 @@ object Training27 {
     QueryDef(
       "q235_dsir_importance",
       (s, d) => {
-        val words = t(s, d, "documents")
+        val words = Tables(s, d, "documents")
           .select(col("doc_id"), col("source"),
             explode(split(col("text"), " ")).as("w"))
           .withColumn("b", pmod(expr(hash60Spark("w")), lit(64)))
@@ -176,7 +174,7 @@ object Training27 {
       (s, d) => {
         val projCols = (1 to 16).map(j =>
           expr(projTerm(j, "embedding", duck = false)).as(s"p$j"))
-        val sample = t(s, d, "embeddings")
+        val sample = Tables(s, d, "embeddings")
           .filter(pmod(col("vec_id"), lit(25)) === 0)
         val proj = sample.select(
           (col("vec_id") +: col("embedding") +: projCols): _*)
@@ -224,7 +222,7 @@ object Training27 {
       "q237_cdc_chunk_dedup",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val words = t(s, d, "documents")
+        val words = Tables(s, d, "documents")
           .select(col("doc_id"),
             posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
           .withColumn("flag",
@@ -303,7 +301,7 @@ object Training27 {
       "q238_shuffle_run_audit",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val laid = t(s, d, "documents")
+        val laid = Tables(s, d, "documents")
           .select(col("doc_id"), col("source"))
           .withColumn("shard",
             pmod(expr(hash60Spark("concat('sh:', doc_id)")), lit(32)))

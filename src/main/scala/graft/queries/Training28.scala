@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.{Num, QueryDef, Tables}
+import graft.Num.round6
 import graft.operators.TextOps.{hash60Duck, hash60Spark}
 
 /** Twenty-eighth wave — privacy-release and model-evaluation machinery:
@@ -28,12 +29,6 @@ import graft.operators.TextOps.{hash60Duck, hash60Spark}
   * bit-for-bit.
   */
 object Training28 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
-  private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- l-diversity + t-closeness: QI = (priority, year, month),
@@ -48,14 +43,14 @@ object Training28 {
     QueryDef(
       "q239_l_diversity",
       (s, d) => {
-        val cls = t(s, d, "orders")
+        val cls = Tables(s, d, "orders")
           .select(col("o_orderpriority"),
             year(col("o_orderdate")).as("yr"),
             month(col("o_orderdate")).as("mon"),
             col("o_orderstatus"))
           .groupBy("o_orderpriority", "yr", "mon", "o_orderstatus")
           .agg(count(lit(1)).as("cnt"))
-        val glob = t(s, d, "orders")
+        val glob = Tables(s, d, "orders")
           .groupBy("o_orderstatus").agg(count(lit(1)).as("gcnt"))
           .withColumn("gtot", sum("gcnt").over())
         // tvd in EXACT integers (the q170 ppm discipline): the per-
@@ -128,7 +123,7 @@ object Training28 {
       (s, d) => {
         val u = "( (" + hash60Spark("concat('dp:', o_orderpriority, ':', yr)") +
           " % 1000000) / 1000000.0 + 0.0000005 )"
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .select(col("o_orderpriority"), year(col("o_orderdate")).as("yr"))
           .groupBy("o_orderpriority", "yr")
           .agg(count(lit(1)).as("n"))
@@ -169,7 +164,7 @@ object Training28 {
     QueryDef(
       "q241_calibration_bins",
       (s, d) => {
-        val scored = t(s, d, "orders")
+        val scored = Tables(s, d, "orders")
           .select(
             round(expr(
               "1.0 / (1.0 + exp(- ((o_totalprice - 250000.0) / 100000.0)))"), 6)
@@ -226,7 +221,7 @@ object Training28 {
         val sums = (1 to D).map(i => Num.dsum(expr(x(i))).as(s"s$i"))
         val prods = for { i <- 1 to D; j <- i to D } yield
           Num.dsum(expr(s"${x(i)} * ${x(j)}")).as(s"sp${i}_$j")
-        val aggRow = t(s, d, "embeddings")
+        val aggRow = Tables(s, d, "embeddings")
           .agg(count(lit(1)).as("n"), (sums ++ prods): _*)
           .collect()(0) // bounded: ONE row of 45 aggregates
         val n = aggRow.getAs[Long]("n").toDouble

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -23,8 +23,6 @@ import graft.{QueryDef, Tables}
   *    data-derived threshold — the parameterized-query surface.
   */
 object Training29 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- SQL scalar UDF: the discounted-price function is declared
@@ -43,7 +41,7 @@ object Training29 {
           CREATE OR REPLACE TEMPORARY FUNCTION graft_disc_price(p DOUBLE, disc DOUBLE)
           RETURNS DOUBLE
           RETURN CAST(CAST(p AS DECIMAL(18,2)) * CAST(1.0 - disc AS DECIMAL(4,2)) AS DOUBLE)""")
-        t(s, d, "lineitem").createOrReplaceTempView("graft_li_udf")
+        Tables(s, d, "lineitem").createOrReplaceTempView("graft_li_udf")
         s.sql("""
           SELECT l_returnflag, count(*) AS n,
                  CAST(SUM(CAST(graft_disc_price(l_extendedprice, l_discount)
@@ -67,7 +65,7 @@ object Training29 {
     QueryDef(
       "q244_filter_clause_agg",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_ord_f")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_ord_f")
         s.sql("""
           SELECT o_orderpriority,
                  count(*) AS n_orders,
@@ -109,7 +107,7 @@ object Training29 {
       "q245_kcore",
       (s, d) =>
         graft.operators.Graphs.kcoreRounds(
-          graft.operators.Graphs.coPurchaseEdges(t(s, d, "lineitem")),
+          graft.operators.Graphs.coPurchaseEdges(Tables(s, d, "lineitem")),
           k = 80, rounds = 6),
       Some {
         val K = 80
@@ -147,7 +145,7 @@ object Training29 {
     QueryDef(
       "q246_session_variables",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_ord_v")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_ord_v")
         s.sql("DECLARE OR REPLACE VARIABLE graft_price_cut DOUBLE")
         s.sql("""
           SET VAR graft_price_cut =

@@ -4,7 +4,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.operators.{Dedup, DeterministicKMeans}
@@ -21,8 +21,6 @@ import graft.operators.TextOps.{hash60Duck, hash60Spark, lshPairsCtesDuck}
   * a single round() at the source for anything that reaches the output.
   */
 object Training3 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** q107 shares one moment/pair list between the Spark plan and the
     * DuckDB oracle so the two formulas cannot drift.
     */
@@ -156,7 +154,7 @@ object Training3 {
       "q105_line_dedup",
       (s, d) => {
         val cap = 4
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         // cached: consumed twice (frequency pass + anti-join probe) —
         // without it the corpus-wide explode+md5 runs twice, doubling
         // the dominant scan cost (same rationale as Dedup.jaccardPairs;
@@ -229,7 +227,7 @@ object Training3 {
     QueryDef(
       "q106_weighted_sample",
       (s, d) =>
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(col("doc_id"), col("n_chars"))
           .withColumn("__pri",
             expr(hash60Spark("cast(doc_id as string)")).cast("double") / col("n_chars"))
@@ -252,7 +250,7 @@ object Training3 {
     QueryDef(
       "q107_corr_matrix",
       (s, d) => {
-        val cents = t(s, d, "lineitem").select(
+        val cents = Tables(s, d, "lineitem").select(
           corrCols.map { case (c, a) =>
             expr(s"cast(round($c * 100, 0) as bigint)").as(a)
           }: _*)
@@ -309,7 +307,7 @@ object Training3 {
     QueryDef(
       "q108_pq_codes",
       (s, d) => {
-        val emb = t(s, d, "embeddings")
+        val emb = Tables(s, d, "embeddings")
         val subs = (0 until 4).map { i =>
           Future {
             DeterministicKMeans.assignments(
@@ -352,7 +350,7 @@ object Training3 {
     QueryDef(
       "q109_pagerank",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val pairs = Dedup.minhashCandidatePairs(
           Dedup.minhashBands(docs, "doc_id", "text"), "doc_id")
         val edges = pairs
@@ -416,7 +414,7 @@ object Training3 {
       "q110_bpe_merges",
       (s, d) => {
         import s.implicits._
-        bpeTrain(t(s, d, "documents"), rounds = 3)._2.toDF("step", "pa", "pb", "cnt")
+        bpeTrain(Tables(s, d, "documents"), rounds = 3)._2.toDF("step", "pa", "pb", "cnt")
       },
       Some {
         val out = (0 until 3).map(r =>
@@ -437,7 +435,7 @@ object Training3 {
     QueryDef(
       "q126_bpe_encode",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val vocab = bpeTrain(docs, rounds = 3, materializeVocab = true)._1
           .select(col("word"),
             size(expr(bpeToks)).cast("long").as("n_tok"),
@@ -483,7 +481,7 @@ object Training3 {
       "q112_ivf_pq_ann",
       (s, d) =>
         graft.operators.Similarity.ivfPqTopK(
-          t(s, d, "embeddings"), "vec_id", "embedding",
+          Tables(s, d, "embeddings"), "vec_id", "embedding",
           queryIds = Seq(0L, 1L, 2L), k = 3),
       Some {
         val coarse = DeterministicKMeans.assignmentsCtesBody(
@@ -544,7 +542,7 @@ object Training3 {
       "q113_dataset_split",
       (s, d) => {
         val h = expr(hash60Spark("cast(doc_id as string)"))
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .withColumn("split",
             when(h % 10 < 8, lit("train"))
               .when(h % 10 < 9, lit("valid"))
@@ -576,7 +574,7 @@ object Training3 {
     QueryDef(
       "q114_training_manifest",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val survivors = Dedup.dedupe(docs, "doc_id", "text")
         // q92 quality rule + q96 mixture thresholds + q113 split label —
         // all three come from the SHARED helpers (Training.qualityGateIds

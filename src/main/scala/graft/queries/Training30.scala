@@ -1,9 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{Num, QueryDef, Tables}
+import graft.Num.round6
 import graft.operators.TextOps.{hash60Duck, hash60Spark, lshPairsCtesDuck}
 import graft.sources.Sinks
 
@@ -23,20 +25,6 @@ import graft.sources.Sinks
   *    low-frequency signs → 8-bit pHash → bucket-capped equality join.
   */
 object Training30 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
-  private def wipe(root: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    val f = new java.io.File(root)
-    if (f.exists()) rm(f)
-  }
-
-  private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
   /** DCT-II coefficient cos(π/16·(i+0.5)·k), rounded to 6 dp at PLAN
     * time — both dialects embed the same literals, no runtime libm.
     */
@@ -65,8 +53,8 @@ object Training30 {
         val root = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_ivm_${Integer.toHexString(d.hashCode)}").toString
-        wipe(root)
-        val base = t(s, d, "orders")
+        FileUtils.deleteQuietly(new java.io.File(root))
+        val base = Tables(s, d, "orders")
           .select(col("o_orderkey"), col("o_orderpriority"),
             col("o_totalprice"))
           .withColumn("v", lit(0L))
@@ -141,7 +129,7 @@ object Training30 {
       "q248_cluster_split",
       (s, d) => {
         import graft.operators.Dedup
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val pairs = Dedup.minhashCandidatePairs(
           Dedup.minhashBands(docs, "doc_id", "text"), "doc_id")
           .localCheckpoint(true) // consumed twice: split + crossing audit
@@ -200,7 +188,7 @@ object Training30 {
       (s, d) => {
         import s.implicits._
         val cells = 16
-        val grid = t(s, d, "documents")
+        val grid = Tables(s, d, "documents")
           .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
           .as[(Long, Array[Byte])]
           .mapPartitions { iter =>

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,16 +29,6 @@ import graft.operators.TextOps.{hash60Duck, hash60Spark}
   *    join key, and the join runs with zero exchanges.
   */
 object Training31 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
-  private def wipe(root: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    val f = new java.io.File(root)
-    if (f.exists()) rm(f)
-  }
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- skip-gram pairs: tokenize with positions, subsample frequent
@@ -56,7 +47,7 @@ object Training31 {
       "q250_skipgram_pairs",
       (s, d) => {
         val T = 100L
-        val toks = t(s, d, "documents")
+        val toks = Tables(s, d, "documents")
           .select(col("doc_id"),
             posexplode(split(col("text"), " ")).as(Seq("pos0", "word")))
           .filter(col("word") =!= "")
@@ -119,7 +110,7 @@ object Training31 {
     QueryDef(
       "q251_target_encoding",
       (s, d) => {
-        val o = t(s, d, "orders")
+        val o = Tables(s, d, "orders")
           .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
         val cat = o.groupBy("o_orderpriority")
           .agg(Num.dsum(col("o_totalprice")).as("s"), count(lit(1)).as("n"))
@@ -170,7 +161,7 @@ object Training31 {
       (s, d) => {
         val K = 64
         val FULL = 1099511627776L // 2^40
-        val tu = t(s, d, "events")
+        val tu = Tables(s, d, "events")
           .filter(col("event_type").isin("click", "purchase"))
           .select("event_type", "user_id").distinct()
           .withColumn("h",
@@ -185,7 +176,7 @@ object Training31 {
         val common = sk.filter(col("event_type") === "click").select("h")
           .intersect(sk.filter(col("event_type") === "purchase").select("h"))
           .agg(count(lit(1)).as("nc"))
-        val exact = t(s, d, "events")
+        val exact = Tables(s, d, "events")
           .filter(col("event_type").isin("click", "purchase"))
           .select("event_type", "user_id").distinct()
           .groupBy("user_id").agg(count(lit(1)).as("nt"))
@@ -265,12 +256,12 @@ object Training31 {
         val oTable = s"graft_b_o_$hex"
         s.sql(s"DROP TABLE IF EXISTS $liTable")
         s.sql(s"DROP TABLE IF EXISTS $oTable")
-        wipe(root)
-        t(s, d, "lineitem")
+        FileUtils.deleteQuietly(new java.io.File(root))
+        Tables(s, d, "lineitem")
           .select("l_orderkey", "l_extendedprice", "l_discount")
           .write.mode("overwrite").option("path", s"$root/li")
           .bucketBy(16, "l_orderkey").sortBy("l_orderkey").saveAsTable(liTable)
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .select("o_orderkey", "o_orderstatus")
           .write.mode("overwrite").option("path", s"$root/o")
           .bucketBy(16, "o_orderkey").sortBy("o_orderkey").saveAsTable(oTable)

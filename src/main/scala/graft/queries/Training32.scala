@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,8 +25,6 @@ import graft.{QueryDef, Tables}
   *    matrix.
   */
 object Training32 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** Exact micro-int vector: round(x·1e6) per component. */
   private val microVec =
     "transform(embedding, x -> cast(round(cast(x as double) * 1000000, 0) as bigint))"
@@ -55,8 +53,8 @@ object Training32 {
     QueryDef(
       "q254_data_contracts",
       (s, d) => {
-        val li = t(s, d, "lineitem")
-        val o = t(s, d, "orders")
+        val li = Tables(s, d, "lineitem")
+        val o = Tables(s, d, "orders")
         def leg(name: String, checked: Column, violations: Column, src: DataFrame) =
           src.agg(checked.as("n_checked"), violations.as("n_violations"))
             .select(lit(name).as("contract"), col("n_checked"),
@@ -141,7 +139,7 @@ object Training32 {
     QueryDef(
       "q255_quantile_normalize",
       (s, d) => {
-        val docs = t(s, d, "documents").select("doc_id", "source", "n_chars")
+        val docs = Tables(s, d, "documents").select("doc_id", "source", "n_chars")
         val ranked = docs
           .withColumn("r", row_number().over(
             Window.partitionBy("source").orderBy("n_chars", "doc_id"))
@@ -214,7 +212,7 @@ object Training32 {
     QueryDef(
       "q256_kcenter_coreset",
       (s, d) => {
-        val pts0 = t(s, d, "embeddings")
+        val pts0 = Tables(s, d, "embeddings")
           .select(col("vec_id"), expr(microVec).as("x6"))
         val first = pts0.orderBy("vec_id").limit(1)
           .collect().head
@@ -283,7 +281,7 @@ object Training32 {
     QueryDef(
       "q257_centroid_label_audit",
       (s, d) => {
-        val ex = t(s, d, "embeddings")
+        val ex = Tables(s, d, "embeddings")
           .select(col("vec_id"), col("label"), expr(microVec).as("x6"))
         val cent = ex
           .select(col("label"), posexplode(col("x6")).as(Seq("j0", "x")))

@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Num, QueryDef, Tables}
+import graft.Num.{halfUpDuck, halfUpSpark}
 
 /** Thirty-third wave — nonparametric testing, distribution comparison,
   * time-series decomposition, graph structure:
@@ -24,16 +25,6 @@ import graft.{Num, QueryDef, Tables}
   *    the edge list, the q60 discipline on graph structure.
   */
 object Training33 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
-  /** Sign-safe half-up integer division s/n (n > 0), both dialects. */
-  private def halfUpSpark(s0: String, n: String): String =
-    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) div (2 * $n))
-        ELSE (2 * ($s0) + $n) div (2 * $n) END"""
-  private def halfUpDuck(s0: String, n: String): String =
-    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) // (2 * $n))
-        ELSE (2 * ($s0) + $n) // (2 * $n) END"""
-
   private val lnMicro = "CAST(round(ln(%s) * 1000000) AS BIGINT)"
 
   val defs: Seq[QueryDef] = Seq(
@@ -52,7 +43,7 @@ object Training33 {
     QueryDef(
       "q258_kruskal_wallis",
       (s, d) => {
-        val gv = t(s, d, "lineitem")
+        val gv = Tables(s, d, "lineitem")
           .select(col("l_returnflag").as("g"),
             col("l_quantity").cast("long").as("v"))
           .groupBy("g", "v").agg(count(lit(1)).as("cnt"))
@@ -144,7 +135,7 @@ object Training33 {
     QueryDef(
       "q259_js_divergence",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val sl = docs.groupBy("source", "lang").agg(count(lit(1)).as("c"))
         val gl = docs.groupBy("lang").agg(count(lit(1)).as("dd"))
         val ns = docs.groupBy("source").agg(count(lit(1)).as("n"))
@@ -217,7 +208,7 @@ object Training33 {
     QueryDef(
       "q260_seasonal_decompose",
       (s, d) => {
-        val daily = t(s, d, "events")
+        val daily = Tables(s, d, "events")
           .select(to_date(col("ts")).as("day"),
             expr("CAST(round(value * 1000000) AS BIGINT)").as("v6"))
           .groupBy("day")
@@ -285,7 +276,7 @@ object Training33 {
     QueryDef(
       "q261_assortativity",
       (s, d) => {
-        val e = graft.operators.Graphs.coPurchaseEdges(t(s, d, "lineitem"))
+        val e = graft.operators.Graphs.coPurchaseEdges(Tables(s, d, "lineitem"))
         val und = graft.operators.Graphs.doubled(e)
           .localCheckpoint(true) // deg + the moment pass both read it
         val deg = und.groupBy(col("u").as("nd")).agg(count(lit(1)).as("dg"))

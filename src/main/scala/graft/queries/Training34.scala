@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,8 +20,6 @@ import graft.{Num, QueryDef, Tables}
   *    user-day (the n-gram extension of q86's pairwise transitions).
   */
 object Training34 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- PIVOT / UNPIVOT / WINDOW as SQL: monthly order revenue
@@ -34,7 +32,7 @@ object Training34 {
     QueryDef(
       "q262_sql_pivot_unpivot",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_orders_pv")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_orders_pv")
         s.sql("""
           WITH agg AS (
             SELECT CAST(date_trunc('month', CAST(o_orderdate AS DATE)) AS DATE) AS month,
@@ -75,13 +73,13 @@ object Training34 {
     QueryDef(
       "q263_grouped_trend",
       (s, d) => {
-        val li = t(s, d, "lineitem")
+        val li = Tables(s, d, "lineitem")
           .select(col("l_orderkey"),
             datediff(col("l_shipdate").cast("date"), lit("1970-01-01")).as("x"),
             expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
-        val o = t(s, d, "orders").select("o_orderkey", "o_custkey")
-        val c = t(s, d, "customer").select("c_custkey", "c_nationkey")
-        val n = t(s, d, "nation").select("n_nationkey", "n_name")
+        val o = Tables(s, d, "orders").select("o_orderkey", "o_custkey")
+        val c = Tables(s, d, "customer").select("c_custkey", "c_nationkey")
+        val n = Tables(s, d, "nation").select("n_nationkey", "n_name")
         li.join(o, col("l_orderkey") === col("o_orderkey"))
           .join(broadcast(c), col("o_custkey") === col("c_custkey"))
           .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
@@ -136,7 +134,7 @@ object Training34 {
     QueryDef(
       "q264_sliding_distinct",
       (s, d) => {
-        val ud = t(s, d, "events")
+        val ud = Tables(s, d, "events")
           .select(to_date(col("ts")).as("day"), col("user_id"))
           .distinct()
           .localCheckpoint() // day spine + explode share one distinct
@@ -172,7 +170,7 @@ object Training34 {
     QueryDef(
       "q265_top_paths",
       (s, d) => {
-        val r = t(s, d, "events")
+        val r = Tables(s, d, "events")
           .select(col("user_id"), to_date(col("ts")).as("day"),
             col("ts"), col("event_id"), col("event_type"))
           .withColumn("rn", row_number().over(

@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.Num.{halfUpDuck, halfUpSpark}
 
 /** Thirty-fifth wave — calibration fitting, attribution, eval
   * reporting, seed expansion:
@@ -22,15 +23,6 @@ import graft.{QueryDef, Tables}
   *    proximity to known-good docs), all integer like q109.
   */
 object Training35 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
-  private def halfUpSpark(s0: String, n: String): String =
-    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) div (2 * $n))
-        ELSE (2 * ($s0) + $n) div (2 * $n) END"""
-  private def halfUpDuck(s0: String, n: String): String =
-    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) // (2 * $n))
-        ELSE (2 * ($s0) + $n) // (2 * $n) END"""
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- isotonic calibration via the PAV minimax identity: over the
@@ -44,7 +36,7 @@ object Training35 {
     QueryDef(
       "q266_isotonic_calibration",
       (s, d) => {
-        val bins = t(s, d, "orders")
+        val bins = Tables(s, d, "orders")
           .select(
             least(floor(expr(
               "round(1.0 / (1.0 + exp(- ((o_totalprice - 250000.0) / 100000.0))), 6)")
@@ -120,7 +112,7 @@ object Training35 {
       "q267_shapley_attribution",
       (s, d) => {
         import s.implicits._
-        val exp0 = t(s, d, "events")
+        val exp0 = Tables(s, d, "events")
           .groupBy(col("user_id"), to_date(col("ts")).as("day"))
           .agg(
             (max(when(col("event_type") === "click", 1).otherwise(0)) +
@@ -195,7 +187,7 @@ object Training35 {
         def wilson(sign: String) =
           s"""round(((p + $Z2 / (2.0 * nd)) $sign 1.96 * sqrt((p * (1.0 - p)) / nd + $Z2 / (4.0 * nd * nd))) /
               (1.0 + $Z2 / nd), 6)"""
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .groupBy("source")
           .agg(count(lit(1)).as("n"),
             sum(when(col("n_chars") >= 200, 1L).otherwise(0L)).as("pos"))
@@ -243,7 +235,7 @@ object Training35 {
       "q269_personalized_pagerank",
       (s, d) => {
         import graft.operators.Dedup
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val pairs = Dedup.minhashCandidatePairs(
           Dedup.minhashBands(docs, "doc_id", "text"), "doc_id")
         val edges = pairs

@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.Num.{halfUpDuck, halfUpSpark}
 import graft.operators.TextOps.{hash60Duck, hash60Spark}
 
 /** Thirty-sixth wave — distributed selection, density clustering, skew
@@ -24,15 +25,6 @@ import graft.operators.TextOps.{hash60Duck, hash60Spark}
   *    cross-entropy) with the real fallback chain.
   */
 object Training36 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
-  private def halfUpSpark(s0: String, n: String): String =
-    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) div (2 * $n))
-        ELSE (2 * ($s0) + $n) div (2 * $n) END"""
-  private def halfUpDuck(s0: String, n: String): String =
-    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) // (2 * $n))
-        ELSE (2 * ($s0) + $n) // (2 * $n) END"""
-
   /** Floor division for possibly-negative x (Spark `div` truncates
     * toward zero; DuckDB `//` floors — this form is identical in both).
     */
@@ -57,7 +49,7 @@ object Training36 {
     QueryDef(
       "q270_conformal_threshold",
       (s, d) => {
-        val base = t(s, d, "orders")
+        val base = Tables(s, d, "orders")
           .select(col("o_orderkey"), col("o_orderpriority"),
             expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("cents"))
         val m = base.groupBy("o_orderpriority")
@@ -132,7 +124,7 @@ object Training36 {
     QueryDef(
       "q271_grid_density_clusters",
       (s, d) => {
-        val pts = t(s, d, "embeddings")
+        val pts = Tables(s, d, "embeddings")
           .select(
             expr("cast(round(cast(element_at(embedding, 1) as double) * 1000000, 0) as bigint)").as("x6"),
             expr("cast(round(cast(element_at(embedding, 2) as double) * 1000000, 0) as bigint)").as("y6"))
@@ -181,7 +173,7 @@ object Training36 {
     QueryDef(
       "q272_skew_diagnosis",
       (s, d) => {
-        val wc = t(s, d, "documents")
+        val wc = Tables(s, d, "documents")
           .select(explode(split(col("text"), " ")).as("word"))
           .filter(col("word") =!= "")
           .groupBy("word").agg(count(lit(1)).as("cnt"))
@@ -228,7 +220,7 @@ object Training36 {
       (s, d) => {
         val LN04 = -916291L
         val ln = "CAST(round(ln(%s) * 1000000) AS BIGINT)"
-        val all = t(s, d, "documents")
+        val all = Tables(s, d, "documents")
           .withColumn("is_train",
             expr(hash60Spark("concat('bo:', doc_id)")) % 10 < 8)
         val docs = all.filter(col("is_train"))

@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.Num.{halfUpDuck, halfUpSpark}
 import graft.operators.Similarity
 import graft.operators.VectorOps.{cosineDuck, lshBucketDuck}
 
@@ -24,15 +25,6 @@ import graft.operators.VectorOps.{cosineDuck, lshBucketDuck}
   *    (the vector sibling of q191's minhash precision/recall).
   */
 object Training37 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
-  private def halfUpSpark(s0: String, n: String): String =
-    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) div (2 * $n))
-        ELSE (2 * ($s0) + $n) div (2 * $n) END"""
-  private def halfUpDuck(s0: String, n: String): String =
-    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) // (2 * $n))
-        ELSE (2 * ($s0) + $n) // (2 * $n) END"""
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- greedy max-coverage selection: 5 rounds of "pick the doc
@@ -50,7 +42,7 @@ object Training37 {
     QueryDef(
       "q274_greedy_set_cover",
       (s, d) => {
-        val dw = t(s, d, "documents")
+        val dw = Tables(s, d, "documents")
           .select(col("doc_id"), explode(expr(
             """CASE WHEN size(split(text, ' ')) >= 3 THEN
                  transform(sequence(3, size(split(text, ' '))),
@@ -131,7 +123,7 @@ object Training37 {
     QueryDef(
       "q275_point_in_time_features",
       (s, d) => {
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .select(col("user_id"), to_date(col("ts")).as("day"), col("event_type"))
         val cutoff = lit("2024-01-24").cast("date")
         val feats = ev.filter(col("day") < cutoff)
@@ -186,7 +178,7 @@ object Training37 {
     QueryDef(
       "q276_diff_in_diff",
       (s, d) => {
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .select(col("user_id"), to_date(col("ts")).as("day"),
             col("event_type"),
             expr("CAST(round(value * 1000000) AS BIGINT)").as("v6"))
@@ -260,7 +252,7 @@ object Training37 {
     QueryDef(
       "q277_ann_recall_eval",
       (s, d) => {
-        val emb = t(s, d, "embeddings")
+        val emb = Tables(s, d, "embeddings")
           .select(col("vec_id"),
             expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
         val truth = Similarity.bruteForceTopK(

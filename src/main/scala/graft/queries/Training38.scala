@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.Num.{halfUpDuck, halfUpSpark}
 import graft.operators.TextOps.{hash60Duck, hash60Spark}
 
 /** Thirty-eighth wave — local privacy, fairness, verification, LTV:
@@ -20,15 +21,6 @@ import graft.operators.TextOps.{hash60Duck, hash60Spark}
   *    age (the value dimension q87's retention matrix lacks).
   */
 object Training38 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
-  private def halfUpSpark(s0: String, n: String): String =
-    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) div (2 * $n))
-        ELSE (2 * ($s0) + $n) div (2 * $n) END"""
-  private def halfUpDuck(s0: String, n: String): String =
-    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) // (2 * $n))
-        ELSE (2 * ($s0) + $n) // (2 * $n) END"""
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- randomized response: each doc reports its sensitive bit
@@ -41,7 +33,7 @@ object Training38 {
     QueryDef(
       "q278_randomized_response",
       (s, d) =>
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(
             when(col("lang") === "en", 1L).otherwise(0L).as("tru"),
             (expr(hash60Spark("concat('rr:', doc_id)")) % 4 === 0).as("flip"))
@@ -89,11 +81,11 @@ object Training38 {
     QueryDef(
       "q279_fairness_report",
       (s, d) => {
-        val o = t(s, d, "orders")
+        val o = Tables(s, d, "orders")
           .select(col("o_custkey"),
             (col("o_totalprice") > 150000.0).cast("long").as("yhat"),
             (col("o_orderstatus") === "F").cast("long").as("y"))
-        val c = t(s, d, "customer").select("c_custkey", "c_mktsegment")
+        val c = Tables(s, d, "customer").select("c_custkey", "c_mktsegment")
         val base = o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
         val g = base.groupBy("c_mktsegment")
           .agg(
@@ -153,7 +145,7 @@ object Training38 {
     QueryDef(
       "q280_merkle_digest",
       (s, d) => {
-        val rows = t(s, d, "lineitem")
+        val rows = Tables(s, d, "lineitem")
           .select(
             pmod(col("l_orderkey"), lit(64)).as("bucket"),
             expr(hash60Spark(
@@ -202,7 +194,7 @@ object Training38 {
     QueryDef(
       "q281_cohort_ltv",
       (s, d) => {
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .select(col("user_id"), to_date(col("ts")).as("day"),
             col("event_type"),
             expr("CAST(round(value * 1000000) AS BIGINT)").as("v6"))

@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.Num.{halfUpDuck, halfUpSpark}
 
 /** Thirty-ninth wave — joint profiling, absorption analytics, BI
   * decomposition, forecast evaluation:
@@ -20,15 +21,6 @@ import graft.{QueryDef, Tables}
   *    forecasting pipeline must beat, with MAE/WAPE over a holdout.
   */
 object Training39 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
-  private def halfUpSpark(s0: String, n: String): String =
-    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) div (2 * $n))
-        ELSE (2 * ($s0) + $n) div (2 * $n) END"""
-  private def halfUpDuck(s0: String, n: String): String =
-    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) // (2 * $n))
-        ELSE (2 * ($s0) + $n) // (2 * $n) END"""
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- 2-D joint histogram: quantity deciles × price 10k-bands,
@@ -38,7 +30,7 @@ object Training39 {
     QueryDef(
       "q282_joint_histogram",
       (s, d) => {
-        val binned = t(s, d, "lineitem")
+        val binned = Tables(s, d, "lineitem")
           .select(
             least(expr("CAST(l_quantity AS BIGINT) div 5"), lit(9L)).as("qbin"),
             least(expr("CAST(floor(l_extendedprice / 10000.0) AS BIGINT)"), lit(9L))
@@ -74,7 +66,7 @@ object Training39 {
     QueryDef(
       "q283_markov_absorption",
       (s, d) => {
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .select(col("user_id"), to_date(col("ts")).as("day"),
             col("ts"), col("event_id"), col("event_type"))
         val w = org.apache.spark.sql.expressions.Window
@@ -155,7 +147,7 @@ object Training39 {
     QueryDef(
       "q284_price_volume_mix",
       (s, d) => {
-        val o = t(s, d, "orders")
+        val o = Tables(s, d, "orders")
           .select(col("o_orderpriority"),
             expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("cents"),
             (col("o_orderdate").cast("date") < lit("1998-01-01").cast("date"))
@@ -202,7 +194,7 @@ object Training39 {
     QueryDef(
       "q285_seasonal_naive_backtest",
       (s, d) => {
-        val daily = t(s, d, "events")
+        val daily = Tables(s, d, "events")
           .groupBy(to_date(col("ts")).as("day"))
           .agg(expr("CAST(sum(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT)")
             .as("actual6"))

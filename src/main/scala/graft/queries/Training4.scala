@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -23,8 +23,6 @@ import graft.operators.TextOps.{hash60Duck, hash60Spark}
   * sums through exact DECIMAL(28,6), one final round at the output.
   */
 object Training4 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** q118's bit-interleave, emitted once for both engines: the 20-bit
     * Z-value of (x, y) each reduced mod 1024. Plain shifts/ands — no
     * udf, no loop; stays inside whole-stage codegen on Spark and
@@ -64,7 +62,7 @@ object Training4 {
     QueryDef(
       "q115_dup_spans",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         // the length filter both matches the oracle's range() semantics
         // (a <5-word doc has no windows and no output row) and guards
         // Spark's sequence(), which would generate a DESCENDING [0,-1]
@@ -129,7 +127,7 @@ object Training4 {
     QueryDef(
       "q116_rag_chunks",
       (s, d) =>
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(
             col("doc_id"),
             posexplode(expr(
@@ -163,7 +161,7 @@ object Training4 {
     QueryDef(
       "q117_unigram_surprisal",
       (s, d) => {
-        val words = t(s, d, "documents")
+        val words = Tables(s, d, "documents")
           .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         val vocab = words.groupBy("w").agg(count(lit(1)).as("cnt"))
         val tot = vocab.agg(sum("cnt").as("tot"))
@@ -212,7 +210,7 @@ object Training4 {
     QueryDef(
       "q118_zorder_stats",
       (s, d) =>
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .select(
             expr("l_partkey % 1024").as("x"),
             expr("l_suppkey % 1024").as("y"))
@@ -243,7 +241,7 @@ object Training4 {
     QueryDef(
       "q119_salted_agg",
       (s, d) =>
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .withColumn("__salt", pmod(hash(col("l_orderkey")), lit(16)))
           .groupBy(col("l_returnflag"), col("__salt"))
           .agg(
@@ -280,7 +278,7 @@ object Training4 {
         val hits = names.foldRight(lit(0L): Column) { case (n, els) =>
           when(col("topic") === n, col(s"h_$n")).otherwise(els)
         }
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(col("doc_id") +: hitCols: _*)
           .withColumn("topic", winner)
           .withColumn("hits", hits)

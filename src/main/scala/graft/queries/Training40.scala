@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.Num.{halfUpDuck, halfUpSpark}
 import graft.operators.TextOps.{hash60Duck, hash60Spark}
 import graft.operators.VectorOps.{cosineDuck, lshBucketDuck, lshBucketSpark}
 
@@ -23,15 +24,6 @@ import graft.operators.VectorOps.{cosineDuck, lshBucketDuck, lshBucketSpark}
   *    hash split).
   */
 object Training40 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
-  private def halfUpSpark(s0: String, n: String): String =
-    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) div (2 * $n))
-        ELSE (2 * ($s0) + $n) div (2 * $n) END"""
-  private def halfUpDuck(s0: String, n: String): String =
-    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) // (2 * $n))
-        ELSE (2 * ($s0) + $n) // (2 * $n) END"""
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- multiprobe LSH recall: same two 4-plane tables as q50, but
@@ -46,7 +38,7 @@ object Training40 {
       "q286_multiprobe_recall",
       (s, d) => {
         graft.functions.CosineSimilarity.register(s)
-        val emb = t(s, d, "embeddings")
+        val emb = Tables(s, d, "embeddings")
           .select(col("vec_id"),
             expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
         val bucketed = emb
@@ -164,7 +156,7 @@ object Training40 {
       "q287_markov_entropy_rate",
       (s, d) => {
         val ln = "CAST(round(ln(%s) * 1000000) AS BIGINT)"
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .select(col("user_id"), to_date(col("ts")).as("day"),
             col("ts"), col("event_id"), col("event_type"))
         val w = Window.partitionBy("user_id", "day").orderBy(col("ts"), col("event_id"))
@@ -223,7 +215,7 @@ object Training40 {
     QueryDef(
       "q288_group_by_all",
       (s, d) => {
-        t(s, d, "lineitem").createOrReplaceTempView("graft_li_gba")
+        Tables(s, d, "lineitem").createOrReplaceTempView("graft_li_gba")
         s.sql("""
           SELECT l_returnflag, l_linestatus,
                  count(*) AS n,
@@ -252,7 +244,7 @@ object Training40 {
     QueryDef(
       "q289_stratified_kfold",
       (s, d) =>
-        t(s, d, "embeddings")
+        Tables(s, d, "embeddings")
           .select(col("vec_id"), col("label"))
           .withColumn("rk", row_number().over(
             Window.partitionBy("label")

@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Num, QueryDef, Tables}
+import graft.Num.{halfUpDuck, halfUpSpark}
 
 /** Forty-first wave — monitoring bands, dispersion, BI movers, eval
   * curves:
@@ -21,15 +22,6 @@ import graft.{Num, QueryDef, Tables}
   *    fairness slices.
   */
 object Training41 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
-  private def halfUpSpark(s0: String, n: String): String =
-    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) div (2 * $n))
-        ELSE (2 * ($s0) + $n) div (2 * $n) END"""
-  private def halfUpDuck(s0: String, n: String): String =
-    s"""CASE WHEN $s0 < 0 THEN -((2 * (-($s0)) + $n) // (2 * $n))
-        ELSE (2 * ($s0) + $n) // (2 * $n) END"""
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- daily quantile bands: exact p10/p50/p90 of the event value
@@ -42,7 +34,7 @@ object Training41 {
     QueryDef(
       "q290_daily_quantile_bands",
       (s, d) =>
-        t(s, d, "events")
+        Tables(s, d, "events")
           .groupBy(to_date(col("ts")).as("day"))
           .agg(
             count(lit(1)).as("n"),
@@ -65,7 +57,7 @@ object Training41 {
     QueryDef(
       "q291_dispersion_index",
       (s, d) =>
-        t(s, d, "events")
+        Tables(s, d, "events")
           .groupBy("event_type")
           .agg(
             count(lit(1)).as("n"),
@@ -108,8 +100,8 @@ object Training41 {
     QueryDef(
       "q292_rank_movers",
       (s, d) => {
-        val rev = t(s, d, "lineitem")
-          .join(t(s, d, "orders").select("o_orderkey", "o_orderdate"),
+        val rev = Tables(s, d, "lineitem")
+          .join(Tables(s, d, "orders").select("o_orderkey", "o_orderdate"),
             col("l_orderkey") === col("o_orderkey"))
           .select(col("l_partkey"),
             expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"),
@@ -165,7 +157,7 @@ object Training41 {
       (s, d) => {
         import s.implicits._
         val th = Seq(50000L, 100000L, 150000L, 200000L, 250000L).toDF("t")
-        val base = t(s, d, "orders")
+        val base = Tables(s, d, "orders")
           .select(col("o_totalprice"),
             (col("o_orderstatus") === "F").cast("long").as("y"))
         base.crossJoin(broadcast(th))

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,8 +33,6 @@ import graft.operators.Similarity
   * sketch-gated streaming-friendly aggregations.
   */
 object Training42 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- q146's production twin: two-sample KS drift statistic on an
@@ -58,7 +57,7 @@ object Training42 {
         // is the two literal CASE chains, linear in grid size; measured
         // the dominant 10x term)
         val qs = (1 to 99).map(i => i / 100.0).mkString(", ")
-        val v = t(s, d, "lineitem")
+        val v = Tables(s, d, "lineitem")
           .filter(col("l_returnflag").isin("R", "A"))
           .select(col("l_returnflag").as("f"), col("l_extendedprice").as("x"))
         // sketch boundaries collected (99 doubles — bounded) and
@@ -133,7 +132,7 @@ object Training42 {
     QueryDef(
       "q295_quantile_bands_tdigest",
       (s, d) => {
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .select(to_date(col("ts")).as("day"), col("value"))
         val b = ev.groupBy("day")
           .agg(count(lit(1)).as("n"),
@@ -183,12 +182,8 @@ object Training42 {
         val root = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_ivfidx_${Integer.toHexString(d.hashCode)}").toString
-        val rootFile = new java.io.File(root)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        if (rootFile.exists()) rm(rootFile)
-        val emb = t(s, d, "embeddings")
+        FileUtils.deleteQuietly(new java.io.File(root))
+        val emb = Tables(s, d, "embeddings")
           .withColumn("vec", expr("transform(embedding, x -> cast(x as double))"))
           .select("vec_id", "vec")
         Similarity.buildIvfIndex(emb, "vec_id", "vec", root,

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -26,8 +26,6 @@ import graft.{QueryDef, Tables}
   *    each, no pair blowup.
   */
 object Training43 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- Otsu binarization threshold over the planted BMPs (q51's
@@ -45,7 +43,7 @@ object Training43 {
       (s, d) => {
         import s.implicits._
         import graft.operators.BmpCodec
-        val imgs = t(s, d, "documents")
+        val imgs = Tables(s, d, "documents")
           .select(col("doc_id")).as[Long]
           .map { id =>
             val did = id % 1000000L
@@ -133,7 +131,7 @@ object Training43 {
       (s, d) => {
         import s.implicits._
         import graft.operators.WavCodec
-        val auds = t(s, d, "documents")
+        val auds = Tables(s, d, "documents")
           .select(col("doc_id")).as[Long]
           .map { id =>
             val did = id % 1000000L
@@ -186,7 +184,7 @@ object Training43 {
       "q299_holt_linear",
       (s, d) => {
         import s.implicits._
-        val daily = t(s, d, "events")
+        val daily = Tables(s, d, "events")
           .groupBy(to_date(col("ts")).as("day"))
           .agg(count(lit(1)).as("n"))
           .orderBy("day")
@@ -249,7 +247,7 @@ object Training43 {
     QueryDef(
       "q300_bag_set_ops",
       (s, d) => {
-        val o = t(s, d, "orders")
+        val o = Tables(s, d, "orders")
         val a = o.filter(col("o_orderdate").cast("date") <
             lit("1997-01-01").cast("date"))
           .select(col("o_orderpriority").as("pri"))

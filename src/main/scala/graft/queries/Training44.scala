@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,8 +24,6 @@ import graft.{Num, QueryDef, Tables}
   *    the metrics were computed correctly.
   */
 object Training44 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- MAD robust outlier census per return flag. Doubled-integer
@@ -40,7 +38,7 @@ object Training44 {
     QueryDef(
       "q301_mad_outliers",
       (s, d) => {
-        val li = t(s, d, "lineitem")
+        val li = Tables(s, d, "lineitem")
           .select(col("l_returnflag").as("f"),
             expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
         val med = li.groupBy("f")
@@ -90,7 +88,7 @@ object Training44 {
     QueryDef(
       "q302_cooccurrence_itemsets",
       (s, d) => {
-        val words = t(s, d, "documents")
+        val words = Tables(s, d, "documents")
           .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
           .filter(col("word") =!= "")
         val top = words.groupBy("word").agg(count(lit(1)).as("c"))
@@ -148,7 +146,7 @@ object Training44 {
     QueryDef(
       "q303_locf_impute",
       (s, d) => {
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .select(col("user_id"), col("ts"), col("event_id"),
             when(col("event_type") =!= "error",
               expr("CAST(round(value * 1000000) AS BIGINT)")).as("v6"))
@@ -200,7 +198,7 @@ object Training44 {
       (s, d) => {
         import s.implicits._
         val obs = org.apache.spark.sql.Observation()
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .observe(obs,
             count(lit(1)).as("n_rows"),
             sum(expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)"))

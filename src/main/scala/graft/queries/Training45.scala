@@ -24,8 +24,6 @@ import graft.{QueryDef, Tables}
   *    exact integers, deterministic, no randomness.
   */
 object Training45 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** q307's BFS loop, shared by the QueryDef and the converged-early
     * spec: an [[graft.Iterate.deltaFixpoint]] capped at the oracle's 4
     * frontier rounds. DELTA-FRONTIER rounds (round-11 verdict item 1):
@@ -44,7 +42,7 @@ object Training45 {
   private[graft] def bfsDistance(
       s: SparkSession, d: String,
       earlyExit: Boolean = true): (DataFrame, Int, Seq[Long]) = {
-    val e = graft.operators.Graphs.coPurchaseEdges(t(s, d, "lineitem"))
+    val e = graft.operators.Graphs.coPurchaseEdges(Tables(s, d, "lineitem"))
     val und = graft.operators.Graphs.doubled(e)
       .localCheckpoint() // every BFS round joins it
     val nodes = und.select(col("u").as("node")).distinct()
@@ -85,7 +83,7 @@ object Training45 {
     QueryDef(
       "q305_map_type_ops",
       (s, d) => {
-        val wc = t(s, d, "documents")
+        val wc = Tables(s, d, "documents")
           .filter(col("doc_id") < 50)
           .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
           .filter(col("word") =!= "")
@@ -118,7 +116,7 @@ object Training45 {
     QueryDef(
       "q306_rag_chunking",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
           .select(col("doc_id"),
             expr("filter(split(text, ' '), w -> w <> '')").as("toks"))
           .withColumn("n", size(col("toks")))
@@ -195,7 +193,7 @@ object Training45 {
     QueryDef(
       "q308_pps_systematic_sample",
       (s, d) => {
-        val rev = t(s, d, "lineitem")
+        val rev = Tables(s, d, "lineitem")
           .groupBy(col("l_partkey").as("pk"))
           .agg(sum(expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)"))
             .as("w_cents"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{Num, QueryDef, Tables}
@@ -25,8 +25,6 @@ import graft.{Num, QueryDef, Tables}
   *    so the oracle is plain COUNT(DISTINCT).
   */
 object Training46 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- tumbling 6-hour event-time windows, batch mode: the window
@@ -37,7 +35,7 @@ object Training46 {
     QueryDef(
       "q309_batch_time_window",
       (s, d) =>
-        t(s, d, "events")
+        Tables(s, d, "events")
           .groupBy(window(col("ts"), "6 hours").as("w"))
           .agg(
             count(lit(1)).as("n"),
@@ -65,7 +63,7 @@ object Training46 {
     QueryDef(
       "q310_batch_session_window",
       (s, d) =>
-        t(s, d, "events")
+        Tables(s, d, "events")
           .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
           .agg(count(lit(1)).as("n_events"))
           .select(col("user_id"),
@@ -104,7 +102,7 @@ object Training46 {
     QueryDef(
       "q311_url_functions",
       (s, d) =>
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(col("doc_id"), col("source"),
             concat(lit("https://ex"), (col("doc_id") % 5).cast("string"),
               lit(".com/p/"), col("doc_id").cast("string"),
@@ -136,7 +134,7 @@ object Training46 {
     QueryDef(
       "q312_bitmap_distinct",
       (s, d) =>
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .groupBy(col("o_orderpriority").as("pri"),
             expr("bitmap_bucket_number(o_custkey)").as("__bucket"))
           .agg(expr("bitmap_construct_agg(bitmap_bit_position(o_custkey))")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -27,8 +27,6 @@ import graft.{QueryDef, Tables}
   *    SQL the oracle runs.
   */
 object Training47 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- approx_top_k heavy hitters with a containment gate. The
@@ -40,7 +38,7 @@ object Training47 {
     QueryDef(
       "q313_approx_top_k",
       (s, d) => {
-        val words = t(s, d, "documents")
+        val words = Tables(s, d, "documents")
           .select(explode(split(col("text"), " ")).as("word"))
           .filter(col("word") =!= "")
         val approx = words
@@ -67,7 +65,7 @@ object Training47 {
     QueryDef(
       "q314_hll_sketch_union",
       (s, d) => {
-        val ev = t(s, d, "events").select("event_type", "user_id")
+        val ev = Tables(s, d, "events").select("event_type", "user_id")
         val per = ev.groupBy("event_type")
           .agg(expr("hll_sketch_agg(user_id, 14)").as("sk"),
             countDistinct("user_id").as("n_exact"))
@@ -104,7 +102,7 @@ object Training47 {
     QueryDef(
       "q315_from_xml",
       (s, d) =>
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(concat(
             lit("<doc><id>"), col("doc_id"),
             lit("</id><lang>"), col("lang"),
@@ -131,7 +129,7 @@ object Training47 {
     QueryDef(
       "q316_sql_pipe_syntax",
       (s, d) => {
-        t(s, d, "lineitem").createOrReplaceTempView("li_pipe")
+        Tables(s, d, "lineitem").createOrReplaceTempView("li_pipe")
         s.sql("""
           FROM li_pipe
           |> WHERE l_quantity < 25

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -21,8 +21,6 @@ import graft.{QueryDef, Tables}
   *    chains, keys-only), the compliance dry-run a warehouse needs.
   */
 object Training48 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** Morton interleave for the ORACLE SQL — the engine-neutral integer
     * arithmetic is owned by graft.operators.ZOrderLayout.morton10 (one
     * source for both dialects, so engine and oracle cannot drift).
@@ -42,7 +40,7 @@ object Training48 {
     QueryDef(
       "q317_phrase_search",
       (s, d) => {
-        val post = t(s, d, "documents")
+        val post = Tables(s, d, "documents")
           .select(col("doc_id"),
             posexplode(expr("filter(split(text, ' '), w -> w <> '')"))
               .as(Seq("pos", "word")))
@@ -127,7 +125,7 @@ object Training48 {
         // spark.graft.layout.exactLimit
         import graft.operators.ZOrderLayout
         ZOrderLayout.scoreExact(ZOrderLayout.keyed(
-          t(s, d, "lineitem"), "l_partkey", "l_suppkey")).orderBy("layout")
+          Tables(s, d, "lineitem"), "l_partkey", "l_suppkey")).orderBy("layout")
       },
       Some {
         val qs = (1 to 63).map(i => i / 64.0).mkString(", ")
@@ -183,18 +181,18 @@ object Training48 {
       "q319_gdpr_erasure_plan",
       (s, d) => {
         import s.implicits._
-        val erased = t(s, d, "customer")
+        val erased = Tables(s, d, "customer")
           .filter(col("c_custkey") % 97 === 0)
           .select(col("c_custkey"))
           .localCheckpoint() // three semi-joins read it
-        val custTotal = t(s, d, "customer").count()
+        val custTotal = Tables(s, d, "customer").count()
         val custHit = erased.count()
-        val orders = t(s, d, "orders")
+        val orders = Tables(s, d, "orders")
         val ordTotal = orders.count()
         val ordHit = orders.join(erased,
           orders("o_custkey") === erased("c_custkey"), "left_semi")
         val ordHitN = ordHit.count()
-        val li = t(s, d, "lineitem")
+        val li = Tables(s, d, "lineitem")
         val liTotal = li.count()
         val liHitN = li.join(ordHit.select("o_orderkey"),
           li("l_orderkey") === col("o_orderkey"), "left_semi").count()

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -20,8 +20,6 @@ import graft.{QueryDef, Tables}
   *    lambda-parity proof for sketch aggregation.
   */
 object Training49 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- ORC round-trip: a lineitem projection written as ORC
@@ -37,7 +35,7 @@ object Training49 {
         val dir = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_orc_${Integer.toHexString(d.hashCode)}").toString
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
             expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
           .write.mode("overwrite").orc(dir)
@@ -68,7 +66,7 @@ object Training49 {
         val dir = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_jsonl_${Integer.toHexString(d.hashCode)}").toString
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .select(col("o_orderkey"), col("o_orderpriority"),
             expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("cents"))
           .write.mode("overwrite").json(dir)
@@ -106,7 +104,7 @@ object Training49 {
               expr("approx_percentile(value, array(0.1d, 0.5d, 0.9d), 10000)")
                 .as("ap")),
           "complete")
-        val batch = t(s, d, "events")
+        val batch = Tables(s, d, "events")
           .select(to_date(col("ts")).as("day"), col("value"))
         batch.join(broadcast(streamed), Seq("day"))
           .groupBy("day")

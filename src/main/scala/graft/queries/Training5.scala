@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,8 +17,6 @@ import graft.operators.TextOps.{hash60Duck, hash60Spark}
   * — integer-exact cumulative window arithmetic).
   */
 object Training5 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- stream-static join: the event stream enriched with the
@@ -34,7 +32,7 @@ object Training5 {
       (s, d) => {
         import graft.streaming.EventStreams
         val cust = broadcast(
-          t(s, d, "customer").select(col("c_custkey"), col("c_mktsegment")))
+          Tables(s, d, "customer").select(col("c_custkey"), col("c_mktsegment")))
         val joined = Tables.eventsStream(s, d)
           .join(cust, col("user_id") === col("c_custkey"))
           .groupBy("c_mktsegment")
@@ -59,7 +57,7 @@ object Training5 {
     QueryDef(
       "q122_winsorize",
       (s, d) => {
-        val li = t(s, d, "lineitem")
+        val li = Tables(s, d, "lineitem")
         val bounds = li.agg(
           round(expr("percentile(l_extendedprice, 0.01)"), 6).as("lo"),
           round(expr("percentile(l_extendedprice, 0.99)"), 6).as("hi"))
@@ -98,7 +96,7 @@ object Training5 {
       (s, d) => {
         val w = Window.partitionBy("source")
           .orderBy(col("n_chars").desc, col("doc_id").asc)
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .withColumn("cum_before",
             coalesce(
               sum("n_chars").over(w.rowsBetween(Window.unboundedPreceding, -1)),
@@ -136,7 +134,7 @@ object Training5 {
     QueryDef(
       "q128_label_balance",
       (s, d) => {
-        val emb = t(s, d, "embeddings").select(col("vec_id"), col("label"))
+        val emb = Tables(s, d, "embeddings").select(col("vec_id"), col("label"))
         val m = emb.groupBy("label").agg(count(lit(1)).as("n"))
           .agg(min("n").as("m"))
         val ranked = emb.withColumn("rk",
@@ -206,7 +204,7 @@ object Training5 {
     QueryDef(
       "q131_cdc_apply",
       (s, d) => {
-        val base = t(s, d, "customer")
+        val base = Tables(s, d, "customer")
           .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
         val changes = base.filter(col("c_custkey") % 7 === 0)
           .select(col("c_custkey"), lit("D").as("op"),

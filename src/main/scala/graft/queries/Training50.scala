@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,8 +22,6 @@ import graft.{Num, QueryDef, Tables}
   *    in front of every exact-URL dedup.
   */
 object Training50 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- Western Electric control rules on daily event counts. The
@@ -37,7 +35,7 @@ object Training50 {
     QueryDef(
       "q323_spc_rules",
       (s, d) => {
-        val daily = t(s, d, "events")
+        val daily = Tables(s, d, "events")
           .groupBy(to_date(col("ts")).as("day"))
           .agg(count(lit(1)).as("x"))
         val m = daily.agg(
@@ -115,7 +113,7 @@ object Training50 {
     QueryDef(
       "q324_bitmap_incremental_distinct",
       (s, d) => {
-        val art = t(s, d, "events")
+        val art = Tables(s, d, "events")
           .select(to_date(col("ts")).as("day"), col("user_id"))
           .groupBy(col("day"), expr("bitmap_bucket_number(user_id)").as("bucket"))
           .agg(expr("bitmap_construct_agg(bitmap_bit_position(user_id))")
@@ -157,7 +155,7 @@ object Training50 {
     QueryDef(
       "q325_url_canonical_dedup",
       (s, d) => {
-        val variants = t(s, d, "documents")
+        val variants = Tables(s, d, "documents")
           .select(col("doc_id"), col("source"),
             explode(array(
               concat(lit("https://EX"), (col("doc_id") % 5).cast("string"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,8 +21,6 @@ import graft.{QueryDef, Tables}
   *    against the exact witness.
   */
 object Training51 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- stratified systematic PPS: documents weighted by character
@@ -36,7 +34,7 @@ object Training51 {
     QueryDef(
       "q326_stratified_pps",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
           .select(col("source"), col("doc_id"),
             length(col("text")).cast("long").as("w"))
         val win = Window.partitionBy("source").orderBy("doc_id")
@@ -90,7 +88,7 @@ object Training51 {
     QueryDef(
       "q327_sliding_hll_distinct",
       (s, d) => {
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .select(to_date(col("ts")).as("day"), col("user_id"))
         val daySk = ev.groupBy("day")
           .agg(expr("hll_sketch_agg(user_id, 14)").as("sk"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,8 +20,6 @@ import graft.{QueryDef, Tables}
   *    data", which downstream BI consumers key on.
   */
 object Training52 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- mode() under the modality contract: Spark's deterministic
@@ -33,7 +31,7 @@ object Training52 {
     QueryDef(
       "q328_mode_contract",
       (s, d) => {
-        val li = t(s, d, "lineitem")
+        val li = Tables(s, d, "lineitem")
           .select(col("l_returnflag").as("f"),
             col("l_quantity").cast("long").as("q"))
         val counts = li.groupBy("f", "q").agg(count(lit(1)).as("c"))
@@ -71,7 +69,7 @@ object Training52 {
     QueryDef(
       "q329_percentile_disc",
       (s, d) => {
-        val li = t(s, d, "lineitem")
+        val li = Tables(s, d, "lineitem")
           .select(col("l_returnflag").as("f"),
             expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
         val cnt = li.groupBy("f", "cents").agg(count(lit(1)).as("c"))
@@ -108,7 +106,7 @@ object Training52 {
     QueryDef(
       "q330_grouping_id",
       (s, d) =>
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .rollup(col("l_returnflag"), col("l_linestatus"))
           .agg(
             grouping_id().as("gid"),

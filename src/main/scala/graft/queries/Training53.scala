@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,8 +20,6 @@ import graft.{QueryDef, Tables}
   *    swept over the operational knob a stream operator must pick).
   */
 object Training53 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- Mann-Whitney U in exact integers: with per-(group, value)
@@ -35,7 +33,7 @@ object Training53 {
     QueryDef(
       "q331_mann_whitney",
       (s, d) => {
-        val li = t(s, d, "lineitem")
+        val li = Tables(s, d, "lineitem")
           .filter(col("l_returnflag").isin("R", "A"))
           .select(col("l_returnflag").as("f"),
             expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
@@ -91,7 +89,7 @@ object Training53 {
       (s, d) => {
         val arrival = Window.partitionBy("user_id").orderBy("event_id")
           .rowsBetween(Window.unboundedPreceding, -1)
-        val late = t(s, d, "events")
+        val late = Tables(s, d, "events")
           .select(col("user_id"), col("event_id"),
             unix_micros(col("ts")).as("tus"))
           .withColumn("maxb", max("tus").over(arrival))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -14,8 +14,6 @@ import graft.{QueryDef, Tables}
   *    typed Aggregator, Generator).
   */
 object Training54 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- the corpus's top-10 trigrams through the custom generator:
@@ -28,7 +26,7 @@ object Training54 {
       "q333_custom_udtf",
       (s, d) => {
         graft.functions.NGramGenerator.register(s)
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(expr(
             "graft_ngrams(filter(split(text, ' '), w -> w <> ''), 3)"))
           .groupBy("ngram")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -18,8 +18,6 @@ import graft.{QueryDef, Tables}
   *    oracled.
   */
 object Training55 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- CSV quoting round-trip: per document a hostile field is
@@ -35,7 +33,7 @@ object Training55 {
         val dir = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_csvq_${Integer.toHexString(d.hashCode)}").toString
-        val planted = t(s, d, "documents")
+        val planted = Tables(s, d, "documents")
           .select(col("doc_id"), col("source"),
             concat(lit("v,"), col("doc_id").cast("string"),
               lit("\"q\"\n"), col("source")).as("hostile"))
@@ -77,8 +75,8 @@ object Training55 {
     QueryDef(
       "q335_not_in_null_semantics",
       (s, d) => {
-        t(s, d, "supplier").createOrReplaceTempView("supp_q335")
-        t(s, d, "customer").createOrReplaceTempView("cust_q335")
+        Tables(s, d, "supplier").createOrReplaceTempView("supp_q335")
+        Tables(s, d, "customer").createOrReplaceTempView("cust_q335")
         s.sql("""
           WITH probe AS (
             SELECT s_nationkey AS k FROM supp_q335

@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.Tables.embDouble
 import graft.operators.Similarity
 
 /** Fifty-sixth wave — ranking quality and sketch set algebra:
@@ -19,12 +20,7 @@ import graft.operators.Similarity
   *    of q252's KMV intersection.
   */
 object Training56 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   private val DIM = 64
-
-  private def embDouble(df: DataFrame): DataFrame =
-    df.withColumn("vec", expr("transform(embedding, x -> cast(x as double))"))
 
   /** Oracle SQL of a sibling QueryDef, wrapped as a parenthesized
     * subquery (DuckDB allows WITH inside a derived table).
@@ -47,7 +43,7 @@ object Training56 {
     QueryDef(
       "q336_ndcg_eval",
       (s, d) => {
-        val emb = embDouble(t(s, d, "embeddings"))
+        val emb = embDouble(Tables(s, d, "embeddings"))
         val exact = Similarity.bruteForceTopK(
           emb.filter(col("vec_id") < 20), emb, "vec_id", "vec", k = 3)
           .select(col("query_id").as("eq"), col("cand_id").as("ec"))
@@ -117,7 +113,7 @@ object Training56 {
     QueryDef(
       "q337_hll_intersection",
       (s, d) => {
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .filter(col("event_type").isin("click", "purchase"))
           .select(col("event_type"), col("user_id"))
         val sk = ev.groupBy("event_type")

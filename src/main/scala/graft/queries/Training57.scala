@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -19,8 +19,6 @@ import graft.{QueryDef, Tables}
   *    parity.
   */
 object Training57 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   private val lnMicro = "CAST(round(ln(%s) * 1000000) AS BIGINT)"
 
   val defs: Seq[QueryDef] = Seq(
@@ -36,7 +34,7 @@ object Training57 {
     QueryDef(
       "q338_encoding_planner",
       (s, d) => {
-        val li = t(s, d, "lineitem")
+        val li = Tables(s, d, "lineitem")
         def stats(cName: String, e: String): DataFrame =
           li.select(expr(e).as("v"))
             .agg(
@@ -100,7 +98,7 @@ object Training57 {
     QueryDef(
       "q339_powerlaw_tail",
       (s, d) => {
-        val e = graft.operators.Graphs.coPurchaseEdges(t(s, d, "lineitem"))
+        val e = graft.operators.Graphs.coPurchaseEdges(Tables(s, d, "lineitem"))
         val und = graft.operators.Graphs.doubled(e)
         val deg = und.groupBy("u").agg(count(lit(1)).as("dg"))
         val tail = deg.filter(col("dg") >= 10)

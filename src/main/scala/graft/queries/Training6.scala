@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,8 +22,6 @@ import graft.operators.TextOps.{hash60Duck, hash60Spark}
   *    contrastive training.
   */
 object Training6 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** micro-nat ln, rounded once at the source (the q74/q117 libm
     * discipline): both engines' ln agree to well under 1e-6 relative,
     * so round(ln(x)*1e6) lands on the same BIGINT and every later step
@@ -51,7 +49,7 @@ object Training6 {
     QueryDef(
       "q133_cms_heavy_hitters",
       (s, d) => {
-        val words = t(s, d, "documents")
+        val words = Tables(s, d, "documents")
           .select(explode(split(col("text"), " ")).as("word"))
           .filter(col("word") =!= "")
         val top = words.groupBy("word").agg(count(lit(1)).as("n_exact"))
@@ -95,7 +93,7 @@ object Training6 {
     QueryDef(
       "q134_tdigest_rank_gate",
       (s, d) => {
-        val li = t(s, d, "lineitem").select(col("l_returnflag"), col("l_extendedprice"))
+        val li = Tables(s, d, "lineitem").select(col("l_returnflag"), col("l_extendedprice"))
         val ag = li.groupBy("l_returnflag").agg(
           expr("approx_percentile(l_extendedprice, 0.5d, 10000)").as("__ap"),
           round(expr("percentile(l_extendedprice, 0.5d)"), 6).as("median_exact"),
@@ -145,7 +143,7 @@ object Training6 {
              CASE WHEN doc_id % 13 = 0
                   THEN concat(' call 555-01', lpad(cast(doc_id % 100 AS string), 2, '0'), ' ok')
                   ELSE '' END)"""
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(col("source"), expr(aug).as("aug"))
           .select(
             col("source"),
@@ -217,7 +215,7 @@ object Training6 {
       (s, d) => {
         val lnC = lnMicroSpark.format("c")
         val lnN = lnMicroSpark.format("n_sampled")
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(col("doc_id"), explode(split(substring(col("text"), 1, 256), "")).as("ch"))
           .filter(col("ch") =!= "")
           .groupBy("doc_id", "ch").agg(count(lit(1)).as("c"))
@@ -261,7 +259,7 @@ object Training6 {
     QueryDef(
       "q137_negative_sampling",
       (s, d) => {
-        val emb = t(s, d, "embeddings").select(col("vec_id"), col("label"))
+        val emb = Tables(s, d, "embeddings").select(col("vec_id"), col("label"))
         val anchors = broadcast(
           emb.filter(col("vec_id") < 20)
             .select(col("vec_id").as("a_id"), col("label").as("a_label")))
@@ -331,7 +329,7 @@ object Training6 {
     QueryDef(
       "q140_bloom_fpp_gate",
       (s, d) => {
-        val orders = t(s, d, "orders").select(col("o_orderkey"))
+        val orders = Tables(s, d, "orders").select(col("o_orderkey"))
         val bloom = orders.stat.bloomFilter("o_orderkey", 2000000L, 0.01)
         val bc = s.sparkContext.broadcast(bloom)
         val mightContain =
@@ -368,7 +366,7 @@ object Training6 {
     QueryDef(
       "q142_bigram_xent",
       (s, d) => {
-        val withWs = t(s, d, "documents")
+        val withWs = Tables(s, d, "documents")
           .select(col("doc_id"), split(col("text"), " ").as("ws"))
           .filter(size(col("ws")) >= 2)
         // the token stream feeds model training (cbg, cctx) AND scoring;
@@ -383,7 +381,7 @@ object Training6 {
         try {
           val cbg = bg.groupBy("bg").agg(count(lit(1)).as("c_bg"))
           val cctx = bg.groupBy("w1").agg(count(lit(1)).as("c_ctx"))
-          val vocab = t(s, d, "documents")
+          val vocab = Tables(s, d, "documents")
             .select(explode(split(col("text"), " ")).as("w"))
             .filter(col("w") =!= "")
             .agg(countDistinct(col("w")).as("v"))
@@ -445,7 +443,7 @@ object Training6 {
       "q143_triangle_count",
       (s, d) =>
         graft.operators.Graphs.triangleStats(
-          graft.operators.Graphs.coPurchaseEdges(t(s, d, "lineitem"))),
+          graft.operators.Graphs.coPurchaseEdges(Tables(s, d, "lineitem"))),
       Some("""
         WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         e AS (
@@ -478,7 +476,7 @@ object Training6 {
         val floorDay =
           """(unix_micros(ts) div 86400000000) +
              CASE WHEN unix_micros(ts) % 86400000000 < 0 THEN -1 ELSE 0 END"""
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .select(col("user_id"), expr(floorDay).as("day"), col("value"))
         val known = ev.groupBy("user_id", "day")
           .agg(expr("CAST(sum(CAST(value AS DECIMAL(28,6))) * 1000000 AS BIGINT)").as("v"))
@@ -567,7 +565,7 @@ object Training6 {
     QueryDef(
       "q145_record_linkage",
       (s, d) => {
-        val p = t(s, d, "part")
+        val p = Tables(s, d, "part")
           .select(col("p_partkey"), col("p_name"), col("p_brand"), col("p_type"), col("p_size"))
         p.as("a").join(p.as("b"),
           substring(col("a.p_name"), 1, 2) === substring(col("b.p_name"), 1, 2) &&
@@ -629,7 +627,7 @@ object Training6 {
       "q146_ks_drift",
       (s, d) => {
         val qs = (1 to 199).map(i => i / 200.0).mkString(", ")
-        val v = t(s, d, "lineitem")
+        val v = Tables(s, d, "lineitem")
           .filter(col("l_returnflag").isin("R", "A"))
           .select(col("l_returnflag").as("f"), col("l_extendedprice").as("x"))
         // boundaries collected (199 doubles — bounded) and embedded as

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -31,8 +32,6 @@ import graft.operators.{Graphs, Similarity}
   *    integer argument, so q112's full SQL oracle is reused verbatim.
   */
 object Training60 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- DOULION triangle estimate (Tsourakakis et al., KDD'09, with
@@ -50,7 +49,7 @@ object Training60 {
       "q342_triangle_doulion",
       (s, d) =>
         Graphs.triangleStats(
-          Graphs.coPurchaseEdges(t(s, d, "lineitem")),
+          Graphs.coPurchaseEdges(Tables(s, d, "lineitem")),
           wedgeMassLimit = 0L, sampleMod = 4),
       Some(s"""
         WITH ${Graphs.coPurchaseEdgesDuck},
@@ -77,7 +76,7 @@ object Training60 {
       "q343_kcore_sampled",
       (s, d) =>
         Graphs.kcoreRounds(
-          Graphs.coPurchaseEdges(t(s, d, "lineitem")),
+          Graphs.coPurchaseEdges(Tables(s, d, "lineitem")),
           k = 80, rounds = 6, edgeLimit = 0L, sampleMod = 4),
       Some {
         val rounds = (1 to 6).map { r =>
@@ -130,7 +129,7 @@ object Training60 {
         // spark.graft.layout.exactLimit
         import graft.operators.ZOrderLayout
         ZOrderLayout.scoreSketch(ZOrderLayout.keyed(
-            t(s, d, "lineitem"), "l_partkey", "l_suppkey"))
+            Tables(s, d, "lineitem"), "l_partkey", "l_suppkey"))
           .select("layout", "n_rows", "slabs_ok", "zorder_wins")
           .orderBy("layout")
       },
@@ -200,12 +199,8 @@ object Training60 {
         val root = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_ivfpqidx_${Integer.toHexString(d.hashCode)}").toString
-        val rootFile = new java.io.File(root)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        if (rootFile.exists()) rm(rootFile)
-        val emb = t(s, d, "embeddings")
+        FileUtils.deleteQuietly(new java.io.File(root))
+        val emb = Tables(s, d, "embeddings")
         Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", root,
           version = 0L, nlist = 4, subspaces = 4, subDim = 16,
           codebook = 8, iters = 2)

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,8 +32,6 @@ import graft.operators.{Dedup, TextOps}
   *    (q45/q99) + the q92 gram-diversity score.
   */
 object Training61 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- HITS (2 authority rounds, 1 hub round, L∞-normalized to
@@ -44,7 +43,7 @@ object Training61 {
     QueryDef(
       "q346_hits",
       (s, d) => {
-        val op = t(s, d, "lineitem")
+        val op = Tables(s, d, "lineitem")
           .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
           .distinct()
           .localCheckpoint() // three keyed aggs read it
@@ -95,7 +94,7 @@ object Training61 {
     QueryDef(
       "q347_deletion_neighborhood_join",
       (s, d) => {
-        val names = t(s, d, "customer").select(col("c_name").as("w")).distinct()
+        val names = Tables(s, d, "customer").select(col("c_name").as("w")).distinct()
         val vars = names.select(col("w"),
           posexplode(expr(
             """transform(sequence(1, length(w)),
@@ -150,7 +149,7 @@ object Training61 {
           .map(_.toInt).getOrElse(1024)
         val hx = TextOps.hash60Spark("concat(cast(c_custkey as string), ':x')")
         val hy = TextOps.hash60Spark("concat(cast(c_custkey as string), ':y')")
-        val pts = t(s, d, "customer")
+        val pts = Tables(s, d, "customer")
           .select(col("c_custkey").as("id"),
             expr(s"$hx % $side").as("x"), expr(s"$hy % $side").as("y"))
           .withColumn("cx", expr("x div 64"))
@@ -207,12 +206,8 @@ object Training61 {
         val root = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_schemaevo_${Integer.toHexString(d.hashCode)}").toString
-        val rootFile = new java.io.File(root)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        if (rootFile.exists()) rm(rootFile)
-        val orders = t(s, d, "orders")
+        FileUtils.deleteQuietly(new java.io.File(root))
+        val orders = Tables(s, d, "orders")
         orders.filter(col("o_orderkey") % 2 === 0)
           .select("o_orderkey", "o_totalprice")
           .write.parquet(s"$root/gen0")
@@ -245,7 +240,7 @@ object Training61 {
     QueryDef(
       "q350_dedup_canonical_quality",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val pairs = Dedup.minhashCandidatePairs(
           Dedup.minhashBands(docs, "doc_id", "text"), "doc_id")
         val comp = Dedup.connectedComponentsStar(pairs, "doc_id_a", "doc_id_b")

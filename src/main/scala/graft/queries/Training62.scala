@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -24,8 +24,6 @@ import graft.{QueryDef, Tables}
   *    dataset.
   */
 object Training62 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- LEFT OUTER stream-stream interval join: views with no
@@ -47,7 +45,7 @@ object Training62 {
         val stage = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_outerjoin_${Integer.toHexString(d.hashCode)}").toString
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
         val maxUs = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
         def sentinel(idBase: Long, viewPlusUs: Long): DataFrame = {
           // a view + a purchase 1 day BEFORE it (cannot match), both
@@ -101,9 +99,9 @@ object Training62 {
     QueryDef(
       "q352_ivm_join_view",
       (s, d) => {
-        val o = t(s, d, "orders")
+        val o = Tables(s, d, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice")
-        val c = t(s, d, "customer").select("c_custkey", "c_mktsegment")
+        val c = Tables(s, d, "customer").select("c_custkey", "c_mktsegment")
         val oOld = o.filter(col("o_orderkey") % 10 < 8)
         val oDelta = o.filter(col("o_orderkey") % 10 >= 8)
         val cOld = c.filter(col("c_custkey") % 10 < 9)
@@ -138,7 +136,7 @@ object Training62 {
     QueryDef(
       "q353_scd2_build",
       (s, d) => {
-        val base = t(s, d, "customer")
+        val base = Tables(s, d, "customer")
           .select(col("c_custkey"),
             expr("CAST(round(c_acctbal * 100, 0) AS BIGINT)").as("cents"))
         val v0 = base.filter(col("c_custkey") % 13 =!= 0)
@@ -188,7 +186,7 @@ object Training62 {
     QueryDef(
       "q354_dependency_discovery",
       (s, d) => {
-        val orders = t(s, d, "orders")
+        val orders = Tables(s, d, "orders")
         def fd(df: DataFrame, lhs: String, rhs: String): DataFrame =
           df.groupBy(col(lhs))
             .agg(countDistinct(col(rhs)).as("nd"))
@@ -210,9 +208,9 @@ object Training62 {
               col("n_lhs"), col("n_violations"),
               (col("n_violations") === 0L).as("holds"))
         }
-        val li = t(s, d, "lineitem")
-        val cust = t(s, d, "customer")
-        val part = t(s, d, "part")
+        val li = Tables(s, d, "lineitem")
+        val cust = Tables(s, d, "customer")
+        val part = Tables(s, d, "part")
         Seq(
           fd(orders, "o_orderkey", "o_custkey"),
           fd(orders, "o_custkey", "o_orderpriority"),

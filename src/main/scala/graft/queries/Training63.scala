@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,8 +26,6 @@ import graft.{QueryDef, Tables}
   *    without scoring the full corpus.
   */
 object Training63 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   private val gapUs = 1800000000L // 30-min session gap (q30 semantics)
 
   val defs: Seq[QueryDef] = Seq(
@@ -50,7 +48,7 @@ object Training63 {
       (s, d) => {
         val byU = Window.partitionBy("user_id")
           .orderBy(col("tus").asc, col("event_id").asc)
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .select(col("user_id"), col("event_id"),
             unix_micros(col("ts")).as("tus"))
         val sessions = ev
@@ -134,7 +132,7 @@ object Training63 {
         val stage = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_twolevel_${Integer.toHexString(d.hashCode)}").toString
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
         val maxUs = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
         def sentinel(id: Long, plusUs: Long): DataFrame =
           s.range(1).select(
@@ -185,7 +183,7 @@ object Training63 {
         val B = 1000000L
         // pin the corpus groupBy once: the tot and qsum probes would
         // otherwise each re-run the documents scan (q346's norm lesson)
-        val c = t(s, d, "documents").groupBy("lang")
+        val c = Tables(s, d, "documents").groupBy("lang")
           .agg(sum("n_chars").as("chars"))
           .localCheckpoint()
         val q = c.crossJoin(broadcast(c.agg(sum("chars").as("tot"))))
@@ -234,7 +232,7 @@ object Training63 {
       (s, d) => {
         val m = 50
         val k = 10
-        val sc = t(s, d, "documents")
+        val sc = Tables(s, d, "documents")
           .select(col("doc_id"), col("n_chars").cast("long").as("s1"),
             (expr("size(array_distinct(filter(split(text, ' '), w -> w <> '')))")
               .cast("long") * 100L).as("s2"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,8 +23,6 @@ import graft.operators.{Dedup, DeterministicKMeans, Graphs, TextOps}
   *    detection is judged by, in exact integer ppm.
   */
 object Training64 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- deterministic random walks (3 steps, one walk per seed =
@@ -41,7 +39,7 @@ object Training64 {
       "q359_random_walks",
       (s, d) => {
         val und = Graphs.doubled(
-          Graphs.coPurchaseEdges(t(s, d, "lineitem"))).localCheckpoint()
+          Graphs.coPurchaseEdges(Tables(s, d, "lineitem"))).localCheckpoint()
         var w: DataFrame = und.select(col("u").as("seed")).distinct()
           .filter(col("seed") % 97 === 0)
           .withColumn("cur", col("seed"))
@@ -101,7 +99,7 @@ object Training64 {
     QueryDef(
       "q360_kmeans_anomaly",
       (s, d) => {
-        val emb = t(s, d, "embeddings")
+        val emb = Tables(s, d, "embeddings")
         val (cents, assigns) =
           DeterministicKMeans.fit(emb, "vec_id", "embedding", k = 8, iters = 2)
         val x6 =
@@ -151,7 +149,7 @@ object Training64 {
     QueryDef(
       "q361_graph_modularity",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val pairs = Dedup.minhashCandidatePairs(
           Dedup.minhashBands(docs, "doc_id", "text"), "doc_id")
           .localCheckpoint() // m, intra, and deg all read it

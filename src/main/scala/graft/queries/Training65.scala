@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,8 +26,6 @@ import graft.{QueryDef, Tables}
   *    log's net effect.
   */
 object Training65 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- IDENTIFIER clause: the report's grouping column arrives as
@@ -38,7 +36,7 @@ object Training65 {
     QueryDef(
       "q362_sql_identifier_clause",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_ord_idf")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_ord_idf")
         s.sql("DECLARE OR REPLACE VARIABLE graft_dim_col STRING")
         s.sql("SET VAR graft_dim_col = 'o_orderpriority'")
         s.sql("""
@@ -69,7 +67,7 @@ object Training65 {
     QueryDef(
       "q363_twopass_exact_median",
       (s, d) => {
-        val cents = t(s, d, "lineitem")
+        val cents = Tables(s, d, "lineitem")
           .select(expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("c"))
           .localCheckpoint() // histogram + candidate-bucket passes read it
         val st = cents.agg(min("c").as("lo"), max("c").as("hi"),
@@ -124,8 +122,8 @@ object Training65 {
     QueryDef(
       "q364_late_arriving_dim",
       (s, d) => {
-        val facts = t(s, d, "orders").select("o_orderkey", "o_custkey")
-        val dim = t(s, d, "customer").select("c_custkey", "c_mktsegment")
+        val facts = Tables(s, d, "orders").select("o_orderkey", "o_custkey")
+        val dim = Tables(s, d, "customer").select("c_custkey", "c_mktsegment")
         val onTime = dim.filter(col("c_custkey") % 10 =!= 7)
         val orphans = facts
           .join(onTime, col("o_custkey") === col("c_custkey"), "left_anti")
@@ -174,7 +172,7 @@ object Training65 {
         val stage = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_cdcstream_${Integer.toHexString(d.hashCode)}").toString
-        val base = t(s, d, "orders")
+        val base = Tables(s, d, "orders")
           .select(col("o_orderkey").as("key"),
             expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("cents"))
         val b1 = base.select(col("key"), lit(1L).as("seq"), col("cents"),
@@ -195,7 +193,7 @@ object Training65 {
           .filter(col("__rn") === 1 && col("live") === 1L)
           .select("key", "cents")
         finalState
-          .join(t(s, d, "orders").select(col("o_orderkey").as("key"),
+          .join(Tables(s, d, "orders").select(col("o_orderkey").as("key"),
             col("o_orderpriority")), "key")
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n_live"), sum("cents").as("sum_cents"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -22,8 +22,6 @@ import graft.operators.{DeterministicKMeans, WavCodec}
   *    deterministic sentinel batches.
   */
 object Training66 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- k-means model selection: three DeterministicKMeans fits
@@ -39,7 +37,7 @@ object Training66 {
     QueryDef(
       "q366_kmeans_model_selection",
       (s, d) => {
-        val emb = t(s, d, "embeddings")
+        val emb = Tables(s, d, "embeddings")
         val x6 =
           "transform(embedding, x -> cast(round(cast(x as double) * 1000000, 0) as bigint))"
         def inertia(k: Int): Long = {
@@ -112,7 +110,7 @@ object Training66 {
       (s, d) => {
         import s.implicits._
         val thr = 1500000L
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .select(col("doc_id")).as[Long]
           .mapPartitions { iter =>
             iter.map { id =>
@@ -205,7 +203,7 @@ object Training66 {
         val stage = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_dedupww_${Integer.toHexString(d.hashCode)}").toString
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
         val maxUs = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
         // THREE sentinel batches at +3h/+6h/+9h: the watermark a batch
         // observes lags the event-time maximum by 1–2 batches

@@ -23,8 +23,6 @@ import graft.plans.MaterializedViewRewrite
   * users).
   */
 object Training67 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** Build + register the per-language MV for `d`'s documents table
     * (idempotent per sfDir), install the rule, and return the base
     * frame. Shared by q369/q370 so the registry state is identical
@@ -39,7 +37,7 @@ object Training67 {
     val mvPath = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"),
       s"graft_mv_docs_${graft.Stage.key(d, "documents")}").toString
-    val docs = t(s, d, "documents")
+    val docs = Tables(s, d, "documents")
     if (!java.nio.file.Files.exists(
         java.nio.file.Paths.get(mvPath, "_SUCCESS"))) {
       docs.groupBy("lang")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -23,8 +23,6 @@ import graft.operators.TextOps.{hash60Duck, hash60Spark}
   *    in parallel).
   */
 object Training68 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** Poisson(1) multiplicity from a 6-dp uniform via inverse CDF; the
     * cumulative thresholds are plan-time literals identical in both
     * dialects (CDF: e⁻¹, 2e⁻¹, 2.5e⁻¹ … rounded to 6 dp).
@@ -52,7 +50,7 @@ object Training68 {
       "q371_poisson_bootstrap_ci",
       (s, d) => {
         val u = s"(${hash60Spark("concat(cast(o_orderkey as string), ':', cast(b as string))")} % 1000000) / 1000000.0"
-        val means = t(s, d, "orders")
+        val means = Tables(s, d, "orders")
           .select(col("o_orderkey"),
             expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("x"))
           .select(col("o_orderkey"), col("x"),
@@ -67,7 +65,7 @@ object Training68 {
           .agg(max("m").as("ci_lo_cents"))
         val hi = means.orderBy(col("m").desc, col("b").desc).limit(2)
           .agg(min("m").as("ci_hi_cents"))
-        val base = t(s, d, "orders")
+        val base = Tables(s, d, "orders")
           .agg(count(lit(1)).as("n"),
             expr("""(2 * sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
                     + count(1)) div (2 * count(1))""").as("mean_cents"))
@@ -115,7 +113,7 @@ object Training68 {
     QueryDef(
       "q372_merkle_antientropy",
       (s, d) => {
-        val base = t(s, d, "orders")
+        val base = Tables(s, d, "orders")
           .select(col("o_orderkey").as("k"),
             expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("c"))
         def tree(df: DataFrame, tag: String): DataFrame =
@@ -191,18 +189,18 @@ object Training68 {
       "q373_fk_topology_layers",
       (s, d) => {
         val cands: Seq[(String, String, DataFrame, String, DataFrame, String)] = Seq(
-          ("lineitem", "orders", t(s, d, "lineitem"), "l_orderkey",
-            t(s, d, "orders"), "o_orderkey"),
-          ("lineitem", "part", t(s, d, "lineitem"), "l_partkey",
-            t(s, d, "part"), "p_partkey"),
-          ("orders", "customer", t(s, d, "orders"), "o_custkey",
-            t(s, d, "customer"), "c_custkey"),
-          ("customer", "nation", t(s, d, "customer"), "c_nationkey",
-            t(s, d, "nation"), "n_nationkey"),
-          ("supplier", "nation", t(s, d, "supplier"), "s_nationkey",
-            t(s, d, "nation"), "n_nationkey"),
-          ("nation", "region", t(s, d, "nation"), "n_regionkey",
-            t(s, d, "region"), "r_regionkey"))
+          ("lineitem", "orders", Tables(s, d, "lineitem"), "l_orderkey",
+            Tables(s, d, "orders"), "o_orderkey"),
+          ("lineitem", "part", Tables(s, d, "lineitem"), "l_partkey",
+            Tables(s, d, "part"), "p_partkey"),
+          ("orders", "customer", Tables(s, d, "orders"), "o_custkey",
+            Tables(s, d, "customer"), "c_custkey"),
+          ("customer", "nation", Tables(s, d, "customer"), "c_nationkey",
+            Tables(s, d, "nation"), "n_nationkey"),
+          ("supplier", "nation", Tables(s, d, "supplier"), "s_nationkey",
+            Tables(s, d, "nation"), "n_nationkey"),
+          ("nation", "region", Tables(s, d, "nation"), "n_regionkey",
+            Tables(s, d, "region"), "r_regionkey"))
         val holds = cands.filter { case (_, _, a, ac, b, bc) =>
           a.select(col(ac).cast("long").as("v")).distinct()
             .join(b.select(col(bc).cast("long").as("v")).distinct(),

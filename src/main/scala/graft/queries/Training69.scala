@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -22,8 +23,6 @@ import graft.{QueryDef, Tables}
   *    the fact and all of it.
   */
 object Training69 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- checkpoint recovery: file0 (orders as an append stream of
@@ -42,16 +41,12 @@ object Training69 {
         val stage = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_ckpt_${Integer.toHexString(d.hashCode)}").toString
-        val stageFile = new java.io.File(stage)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        if (stageFile.exists()) rm(stageFile)
+        FileUtils.deleteQuietly(new java.io.File(stage))
         val streamDir = s"$stage/stream"
         val ckpt = s"$stage/checkpoint"
         java.nio.file.Files.createDirectories(
           java.nio.file.Paths.get(streamDir))
-        val base = t(s, d, "orders")
+        val base = Tables(s, d, "orders")
           .select(col("o_orderkey").as("k"), col("o_orderpriority").as("pri"))
         def writeFile(df: DataFrame, name: String): Unit = {
           val tmp = s"$stage/tmp_$name"
@@ -108,13 +103,13 @@ object Training69 {
           s"graft_dpp_${graft.Stage.key(d, "orders")}").toString
         if (!java.nio.file.Files.exists(
             java.nio.file.Paths.get(root, "_SUCCESS"))) {
-          t(s, d, "orders")
+          Tables(s, d, "orders")
             .select("o_orderkey", "o_totalprice", "o_orderpriority")
             .write.mode("overwrite")
             .partitionBy("o_orderpriority").parquet(root)
         }
         val facts = s.read.parquet(root)
-        val dim = t(s, d, "orders")
+        val dim = Tables(s, d, "orders")
           .select(col("o_orderpriority").as("pri")).distinct()
           .withColumn("tier",
             when(col("pri") < "3", lit("hot")).otherwise(lit("cold")))

@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.Tables.embDouble
 import graft.operators.{Similarity, VectorOps}
 
 /** Seventh wave: retrieval fusion and the remaining drift / contrastive /
@@ -29,11 +30,6 @@ import graft.operators.{Similarity, VectorOps}
   * (Spark `div` and DuckDB `//` both truncate toward zero).
   */
 object Training7 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
-  private def embDouble(df: DataFrame): DataFrame =
-    df.withColumn("vec", expr("transform(embedding, x -> cast(x as double))"))
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- reciprocal-rank fusion of a lexical and a vector retrieval
@@ -50,7 +46,7 @@ object Training7 {
       "q147_rrf_fusion",
       (s, d) => {
         graft.functions.CosineSimilarity.register(s)
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
           .select(col("doc_id"), split(col("text"), " ").as("words"))
         val qdocs = docs.filter(col("doc_id") < 3)
           .select(col("doc_id").as("query_id"), col("words").as("qwords"))
@@ -65,7 +61,7 @@ object Training7 {
           .filter(col("lex_rank") <= 100)
           .select("query_id", "doc_id", "lex_rank")
 
-        val emb = embDouble(t(s, d, "embeddings"))
+        val emb = embDouble(Tables(s, d, "embeddings"))
         val qv = emb.filter(col("vec_id") < 3)
           .select(col("vec_id").as("query_id"), col("vec").as("qv"))
         val vec = broadcast(qv).join(emb, col("vec_id") =!= col("query_id"))
@@ -146,7 +142,7 @@ object Training7 {
       (s, d) => {
         val qs = (1 to 9).map(i => i / 10.0).mkString(", ")
         val dec = "CAST(%s AS DECIMAL(38,0))"
-        val v = t(s, d, "lineitem")
+        val v = Tables(s, d, "lineitem")
           .filter(col("l_returnflag").isin("R", "A"))
           .select(col("l_returnflag").as("f"), col("l_extendedprice").as("x"))
         val b = v.filter(col("f") === "R")
@@ -215,7 +211,7 @@ object Training7 {
     QueryDef(
       "q149_hard_negatives",
       (s, d) => {
-        val emb = embDouble(t(s, d, "embeddings"))
+        val emb = embDouble(Tables(s, d, "embeddings"))
         Similarity.hardNegativesTopK(
           emb.filter(col("vec_id") < 10), emb, "vec_id", "vec", "label", k = 3)
       },
@@ -245,7 +241,7 @@ object Training7 {
     QueryDef(
       "q150_pmi_pairs",
       (s, d) => {
-        val docs = t(s, d, "documents")
+        val docs = Tables(s, d, "documents")
         val words = docs
           .select(col("doc_id"),
             explode(array_distinct(split(col("text"), " "))).as("w"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -24,8 +24,6 @@ import graft.operators.AhoCorasick
   *    aggregation pass, no gradient loop, no floats anywhere.
   */
 object Training70 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** The q377 lexicon. Every term is border-free (no proper prefix
     * equals a suffix), so occurrences of a term can never overlap
     * themselves and the all-occurrence automaton count equals the
@@ -65,7 +63,7 @@ object Training70 {
     QueryDef(
       "q376_execute_immediate",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_ord_ei")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_ord_ei")
         s.sql("DECLARE OR REPLACE VARIABLE graft_stmt STRING")
         s.sql(
           """SET VAR graft_stmt =
@@ -95,7 +93,7 @@ object Training70 {
         val terms = lexicon
         val ac = new AhoCorasick(terms)
         import s.implicits._
-        val docs = t(s, d, "documents").select(col("text")).as[String]
+        val docs = Tables(s, d, "documents").select(col("text")).as[String]
         docs
           .mapPartitions { it =>
             val occ = new Array[Long](terms.size)
@@ -139,9 +137,9 @@ object Training70 {
     QueryDef(
       "q378_multiple_regression",
       (s, d) => {
-        val li = t(s, d, "lineitem").select("l_partkey", "l_quantity",
+        val li = Tables(s, d, "lineitem").select("l_partkey", "l_quantity",
           "l_extendedprice")
-        val pt = t(s, d, "part").select("p_partkey", "p_retailprice")
+        val pt = Tables(s, d, "part").select("p_partkey", "p_retailprice")
         val joined = li.join(broadcast(pt),
             li("l_partkey") === pt("p_partkey"))
           .selectExpr(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -32,8 +32,6 @@ import graft.{QueryDef, Tables}
   *    d2xy inverse and pins the unit-step adjacency property.
   */
 object Training71 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** 5-bit Morton interleave (a,b ∈ [0,32)) as dialect-neutral SQL. */
   private def morton5(a: String, b: String): String =
     (0 until 5).map { i =>
@@ -74,14 +72,14 @@ object Training71 {
     QueryDef(
       "q379_bitmap_index_semijoin",
       (s, d) => {
-        val pris = t(s, d, "orders").select("o_orderpriority").distinct()
-        val a = t(s, d, "orders")
+        val pris = Tables(s, d, "orders").select("o_orderpriority").distinct()
+        val a = Tables(s, d, "orders")
           .groupBy(col("o_orderpriority").as("pri"),
             expr("bitmap_bucket_number(o_orderkey)").as("bucket"))
           .agg(expr("bitmap_construct_agg(bitmap_bit_position(o_orderkey))")
             .as("bm"))
           .withColumn("cnt", expr("CAST(bitmap_count(bm) AS BIGINT)"))
-        val b = t(s, d, "lineitem").filter(col("l_returnflag") === "R")
+        val b = Tables(s, d, "lineitem").filter(col("l_returnflag") === "R")
           .groupBy(expr("bitmap_bucket_number(l_orderkey)").as("bucket"))
           .agg(expr("bitmap_construct_agg(bitmap_bit_position(l_orderkey))")
             .as("bm"))
@@ -120,7 +118,7 @@ object Training71 {
       "q380_decision_stump",
       (s, d) => {
         val S = "1000000"
-        val base = t(s, d, "lineitem").selectExpr(
+        val base = Tables(s, d, "lineitem").selectExpr(
           "CAST(l_quantity AS BIGINT) AS qty",
           "CAST(round(l_discount * 100, 0) AS BIGINT) AS disc",
           "CASE WHEN l_returnflag = 'R' THEN 1L ELSE 0L END AS pos")
@@ -189,7 +187,7 @@ object Training71 {
       "q381_hilbert_layout",
       (s, d) => {
         val hlit = hilbert32.mkString("array(", ", ", ")")
-        val keyed = t(s, d, "lineitem")
+        val keyed = Tables(s, d, "lineitem")
           .selectExpr("CAST(l_partkey % 32 AS INT) AS a",
             "CAST(l_suppkey % 32 AS INT) AS b")
           .selectExpr("a", "b",

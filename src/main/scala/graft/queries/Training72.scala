@@ -31,8 +31,6 @@ import graft.{QueryDef, Tables}
   *    skewed partition fanning out — with zero query-author salting.
   */
 object Training72 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- pivot closeness: sources are the 16 nodes with the smallest
@@ -48,7 +46,7 @@ object Training72 {
       "q382_closeness_sampled",
       (s, d) => {
         val und = graft.operators.Graphs.doubled(
-          graft.operators.Graphs.coPurchaseEdges(t(s, d, "lineitem")))
+          graft.operators.Graphs.coPurchaseEdges(Tables(s, d, "lineitem")))
           .localCheckpoint()
         val sources = und.select(col("u").as("node")).distinct()
           .orderBy(md5(col("node").cast("string")), col("node"))
@@ -110,7 +108,7 @@ object Training72 {
       (s, d) => {
         val k = 8
         import s.implicits._
-        val keys = t(s, d, "lineitem")
+        val keys = Tables(s, d, "lineitem")
           .selectExpr("""CASE WHEN l_orderkey % 4 != 0
               THEN concat('hot', CAST(l_orderkey % 3 AS STRING))
               ELSE concat('cold', CAST(l_orderkey % 997 AS STRING)) END
@@ -138,7 +136,7 @@ object Training72 {
         val kth = merged.map(_._2).sorted(Ordering[Long].reverse)
           .drop(k).headOption.getOrElse(0L)
         val candidates = merged.filter(_._2 > kth).map(_._1)
-        val total = t(s, d, "lineitem").count()
+        val total = Tables(s, d, "lineitem").count()
         // exact recount over candidates only (pushed-down IN filter);
         // bound check against the merged estimate: MG never overcounts
         // and the summed per-partition undercount is ≤ n/(k+1) ≤ n/k,
@@ -230,14 +228,14 @@ object Training72 {
     // separate tasks, so a single-file local input (1 mapper) is
     // structurally unsplittable — at 100 TB the scan has thousands of
     // mappers and this is a no-op cost-wise
-    val left = t(s, d, "lineitem").repartition(32).selectExpr(
+    val left = Tables(s, d, "lineitem").repartition(32).selectExpr(
       "CASE WHEN l_orderkey % 4 != 0 THEN 0 ELSE l_orderkey % 1000 END AS k",
       "md5(CAST(l_orderkey AS STRING)) AS pad")
     // the dictionary is materialized BEFORE the join: OptimizeSkewedJoin
     // pattern-matches SMJ(Sort(ShuffleStage), Sort(ShuffleStage)) and an
     // aggregate sitting between the right shuffle and the join would
     // disqualify the split
-    val right = t(s, d, "orders")
+    val right = Tables(s, d, "orders")
       .groupBy(expr("o_orderkey % 1000").as("k"))
       .agg(expr("SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT))")
         .as("rv"))

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -28,8 +29,6 @@ import graft.{QueryDef, Tables}
   *    engines run the same greedy non-overlapping scan.
   */
 object Training73 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- three-way merge. Base: orders key→price cents. Branch A:
@@ -45,12 +44,8 @@ object Training73 {
         val root = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_branch_${Integer.toHexString(d.hashCode)}").toString
-        val rootFile = new java.io.File(root)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        if (rootFile.exists()) rm(rootFile)
-        val base = t(s, d, "orders").selectExpr("o_orderkey AS k",
+        FileUtils.deleteQuietly(new java.io.File(root))
+        val base = Tables(s, d, "orders").selectExpr("o_orderkey AS k",
           "CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents")
         base.write.mode("overwrite").parquet(s"$root/base")
         val b0 = s.read.parquet(s"$root/base")
@@ -124,7 +119,7 @@ object Training73 {
           s"graft_pspec_${graft.Stage.key(d, "events")}").toString
         if (!java.nio.file.Files.exists(
             java.nio.file.Paths.get(root, "_DONE"))) {
-          val ev = t(s, d, "events").selectExpr("event_id", "user_id",
+          val ev = Tables(s, d, "events").selectExpr("event_id", "user_id",
             "event_type", "value", "to_date(ts) AS day",
             "date_format(ts, 'yyyy-MM') AS month")
           ev.filter(col("day") < "2024-01-16")
@@ -164,7 +159,7 @@ object Training73 {
     QueryDef(
       "q387_sequence_pattern",
       (s, d) => {
-        val coded = t(s, d, "events").selectExpr("user_id",
+        val coded = Tables(s, d, "events").selectExpr("user_id",
           "unix_micros(ts) AS ts_us", "event_id",
           """CASE event_type WHEN 'view' THEN 'v' WHEN 'click' THEN 'c'
              WHEN 'purchase' THEN 'p' ELSE 'e' END AS code""")

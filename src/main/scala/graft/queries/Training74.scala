@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -29,8 +29,6 @@ import graft.{QueryDef, Tables}
   *    scoping, no per-tenant view sprawl.
   */
 object Training74 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- Bellman–Ford: overlap-weighted co-purchase graph (edges
@@ -40,7 +38,7 @@ object Training74 {
     QueryDef(
       "q388_weighted_shortest_path",
       (s, d) => {
-        val op = t(s, d, "lineitem")
+        val op = Tables(s, d, "lineitem")
           .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
           .distinct()
         val ew = op.as("a").join(op.as("b"),
@@ -119,7 +117,7 @@ object Training74 {
     QueryDef(
       "q389_horvitz_thompson",
       (s, d) => {
-        val li = t(s, d, "lineitem")
+        val li = Tables(s, d, "lineitem")
         val rev = li.groupBy(col("l_partkey").as("pk"))
           .agg(sum(expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)"))
             .as("w_cents"),
@@ -193,7 +191,7 @@ object Training74 {
     QueryDef(
       "q390_row_policy_view",
       (s, d) => {
-        t(s, d, "customer").createOrReplaceTempView("graft_cust_rls")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_cust_rls")
         s.sql("DECLARE OR REPLACE VARIABLE graft_tenant STRING")
         s.sql("""CREATE OR REPLACE TEMPORARY VIEW graft_rls AS
           SELECT c_custkey, c_nationkey, c_acctbal

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,15 +33,13 @@ import graft.operators.VectorOps
   *    batch-over-everything).
   */
 object Training75 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
       "q391_filtered_knn",
       (s, d) => {
         graft.functions.CosineSimilarity.register(s)
-        val emb = t(s, d, "embeddings")
+        val emb = Tables(s, d, "embeddings")
           .withColumn("vec", expr("transform(embedding, x -> cast(x as double))"))
           .select("vec_id", "label", "vec")
         val q = emb.filter(pmod(col("vec_id"), lit(100)) === 0)
@@ -144,7 +143,7 @@ object Training75 {
           sys.props("java.io.tmpdir"), s"graft_bprune_$hex").toString
         val table = s"graft_bp_li_$hex"
         if (!s.catalog.tableExists(table)) {
-          t(s, d, "lineitem")
+          Tables(s, d, "lineitem")
             .select("l_orderkey", "l_quantity", "l_extendedprice")
             .write.mode("overwrite").option("path", s"$root/li")
             .bucketBy(16, "l_orderkey").sortBy("l_orderkey")
@@ -173,14 +172,10 @@ object Training75 {
         val stage = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_lambda_${Integer.toHexString(d.hashCode)}").toString
-        val stageFile = new java.io.File(stage)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        if (stageFile.exists()) rm(stageFile)
+        FileUtils.deleteQuietly(new java.io.File(stage))
         java.nio.file.Files.createDirectories(
           java.nio.file.Paths.get(s"$stage/tail"))
-        val ev = t(s, d, "events").selectExpr("event_type",
+        val ev = Tables(s, d, "events").selectExpr("event_type",
           "CAST(round(value * 100, 0) AS BIGINT) AS cents",
           "to_date(ts) AS day")
         val batch = ev.filter(col("day") <= "2024-01-15")

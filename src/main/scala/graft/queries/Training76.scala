@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -34,14 +34,12 @@ import graft.operators.{DeterministicKMeans, EquiDepthBins}
   *    q318→q344 recipe) — reach for q489 at scale.
   */
 object Training76 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
       "q394_kmeans_silhouette",
       (s, d) => {
-        val emb = t(s, d, "embeddings")
+        val emb = Tables(s, d, "embeddings")
         val (cents, _) = DeterministicKMeans.fit(
           emb, "vec_id", "embedding", k = 8, iters = 5)
         val v6 = emb.select(col("vec_id"),
@@ -89,7 +87,7 @@ object Training76 {
     QueryDef(
       "q395_sequence_edit_distance",
       (s, d) => {
-        val seqs = t(s, d, "events").selectExpr("user_id",
+        val seqs = Tables(s, d, "events").selectExpr("user_id",
           "unix_micros(ts) AS ts_us", "event_id",
           """CASE event_type WHEN 'view' THEN 'v' WHEN 'click' THEN 'c'
              WHEN 'purchase' THEN 'p' ELSE 'e' END AS code""")
@@ -143,7 +141,7 @@ object Training76 {
       (s, d) => {
         val lo = 2000000.0; val hi = 6000000.0
         val qs = (1 to 63).map(i => i / 64.0).mkString(", ")
-        val v = t(s, d, "lineitem")
+        val v = Tables(s, d, "lineitem")
           .selectExpr("CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS v")
           .localCheckpoint() // boundaries, summary, and witness read it
         val bs = v.agg(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -26,14 +26,12 @@ import graft.{QueryDef, Tables}
   *    at 100 TB. Declared: trace + top-10 off-diagonal cells by |v|.
   */
 object Training77 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
       "q397_interval_range_frame",
       (s, d) => {
-        t(s, d, "events").selectExpr("user_id", "ts",
+        Tables(s, d, "events").selectExpr("user_id", "ts",
           "CAST(round(value * 100, 0) AS BIGINT) AS cents")
           .createOrReplaceTempView("graft_ev_rf")
         s.sql("""
@@ -69,10 +67,10 @@ object Training77 {
     QueryDef(
       "q398_column_lineage",
       (s, d) => {
-        val li = t(s, d, "lineitem")
-        val o = t(s, d, "orders")
-        val c = t(s, d, "customer")
-        val n = t(s, d, "nation")
+        val li = Tables(s, d, "lineitem")
+        val o = Tables(s, d, "orders")
+        val c = Tables(s, d, "customer")
+        val n = Tables(s, d, "nation")
         val star = li
           .join(o, col("l_orderkey") === col("o_orderkey"))
           .join(c, col("o_custkey") === col("c_custkey"))
@@ -99,7 +97,7 @@ object Training77 {
       "q399_gram_matrix",
       (s, d) => {
         import s.implicits._
-        val vecs = t(s, d, "embeddings")
+        val vecs = Tables(s, d, "embeddings")
           .selectExpr("""transform(embedding,
               x -> cast(round(cast(x as double) * 1000000, 0) as bigint))
               AS v6""")

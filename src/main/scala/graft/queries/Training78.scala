@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -22,16 +22,14 @@ import graft.{QueryDef, Tables}
   *    semi-structured scan surface completing q163.
   */
 object Training78 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
       "q400_waiting_orders",
       (s, d) => {
-        val li = t(s, d, "lineitem").select("l_orderkey", "l_suppkey",
+        val li = Tables(s, d, "lineitem").select("l_orderkey", "l_suppkey",
           "l_shipdate")
-        val o = t(s, d, "orders").select("o_orderkey", "o_orderdate")
+        val o = Tables(s, d, "orders").select("o_orderkey", "o_orderdate")
         // per (order, supplier): any late line? One keyed agg replaces
         // the per-row correlated subqueries of the textbook SQL.
         val perSupp = li
@@ -50,7 +48,7 @@ object Training78 {
           .join(multi, "ok")
           .groupBy(col("sk").as("s_suppkey"))
           .agg(count(lit(1)).as("numwait"))
-          .join(t(s, d, "supplier").select("s_suppkey", "s_name"),
+          .join(Tables(s, d, "supplier").select("s_suppkey", "s_name"),
             "s_suppkey")
           .select("s_name", "numwait")
           .orderBy(col("numwait").desc, col("s_name"))
@@ -77,7 +75,7 @@ object Training78 {
     QueryDef(
       "q401_variant_explode",
       (s, d) => {
-        t(s, d, "events").selectExpr("parse_json(props) AS v")
+        Tables(s, d, "events").selectExpr("parse_json(props) AS v")
           .createOrReplaceTempView("graft_ev_var")
         s.sql("""
           SELECT f.key,

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -26,8 +26,6 @@ import graft.{QueryDef, Tables}
   *    training batcher pays, the number that motivates q94's packing.
   */
 object Training79 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
@@ -35,17 +33,17 @@ object Training79 {
       (s, d) => {
         val tok = (c: org.apache.spark.sql.Column) =>
           md5(concat(lit("graft-salt:"), c.cast("string")))
-        val cust = t(s, d, "customer")
+        val cust = Tables(s, d, "customer")
           .select(tok(col("c_custkey")).as("c_tok"),
             col("c_mktsegment"))
-        val ord = t(s, d, "orders")
+        val ord = Tables(s, d, "orders")
           .select(tok(col("o_custkey")).as("o_tok"),
             expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("cents"))
         val tokenized = ord.join(cust, col("o_tok") === col("c_tok"))
           .groupBy("c_mktsegment")
           .agg(count(lit(1)).as("n_orders"), sum("cents").as("sum_cents"))
-        val raw = t(s, d, "orders")
-          .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
+        val raw = Tables(s, d, "orders")
+          .join(Tables(s, d, "customer"), col("o_custkey") === col("c_custkey"))
           .groupBy(col("c_mktsegment"))
           .agg(count(lit(1)).as("n_raw"),
             sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
@@ -75,7 +73,7 @@ object Training79 {
       "q403_frequent_triples",
       (s, d) => {
         val minsup = 2L
-        val baskets = t(s, d, "lineitem")
+        val baskets = Tables(s, d, "lineitem")
           .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
           .distinct().localCheckpoint()
         // Apriori level-1 prune BEFORE the pair self-join: a pair with
@@ -159,7 +157,7 @@ object Training79 {
     QueryDef(
       "q404_length_bucketing_waste",
       (s, d) => {
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .selectExpr(
             "size(split(trim(text), ' +')) AS n_tokens")
           .selectExpr("n_tokens",

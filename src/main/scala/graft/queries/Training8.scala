@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,8 +19,6 @@ import graft.operators.Skyline
   *    corpora (mixture weights, token counts), exact in cents.
   */
 object Training8 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   private val centsOf = "CAST(round(%s * 100, 0) AS BIGINT)"
 
   val defs: Seq[QueryDef] = Seq(
@@ -37,7 +35,7 @@ object Training8 {
     QueryDef(
       "q151_attribution",
       (s, d) => {
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
         val p = ev.filter(col("event_type") === "purchase")
           .select(col("user_id"), col("event_id").as("pid"), col("ts").as("pts"),
             expr(centsOf.format("value")).as("cents"))
@@ -95,7 +93,7 @@ object Training8 {
     QueryDef(
       "q152_skyline",
       (s, d) => {
-        val per = t(s, d, "lineitem").groupBy("l_suppkey").agg(
+        val per = Tables(s, d, "lineitem").groupBy("l_suppkey").agg(
           sum(expr(centsOf.format("l_quantity"))).as("qty_c"),
           sum(expr(centsOf.format("l_extendedprice"))).as("price_c"))
         Skyline.skyline2D(per, "l_suppkey", "qty_c", "price_c")
@@ -123,7 +121,7 @@ object Training8 {
     QueryDef(
       "q153_weighted_median",
       (s, d) => {
-        val li = t(s, d, "lineitem").select(col("l_returnflag"),
+        val li = Tables(s, d, "lineitem").select(col("l_returnflag"),
           expr(centsOf.format("l_extendedprice")).as("x_c"),
           expr(centsOf.format("l_quantity")).as("w_c"))
         val g = li.groupBy("l_returnflag", "x_c").agg(sum("w_c").as("w"))
@@ -165,7 +163,7 @@ object Training8 {
     QueryDef(
       "q154_cusum_changepoint",
       (s, d) => {
-        val daily = t(s, d, "events")
+        val daily = Tables(s, d, "events")
           .groupBy(col("event_type"),
             date_trunc("day", col("ts")).cast("date").as("day"))
           .agg(count(lit(1)).as("x"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -27,14 +27,12 @@ import graft.{QueryDef, Tables}
   *    not just whether it exists.
   */
 object Training80 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
       "q405_audit_chain",
       (s, d) => {
-        val daily = t(s, d, "events")
+        val daily = Tables(s, d, "events")
           .selectExpr("to_date(ts) AS day",
             """md5(concat(CAST(event_id AS STRING), ':',
                CAST(unix_micros(ts) AS STRING))) AS rh""")
@@ -81,7 +79,7 @@ object Training80 {
           s"graft_nested_${graft.Stage.key(d, "orders")}").toString
         if (!java.nio.file.Files.exists(
             java.nio.file.Paths.get(root, "_SUCCESS"))) {
-          t(s, d, "orders").selectExpr("o_orderkey",
+          Tables(s, d, "orders").selectExpr("o_orderkey",
             """named_struct(
                  'customer', named_struct('custkey', o_custkey,
                                           'status', o_orderstatus),
@@ -121,14 +119,14 @@ object Training80 {
       "q407_uplift_deciles",
       (s, d) => {
         val cust = graft.operators.ScalableRank.withNtile(
-          t(s, d, "customer").selectExpr("c_custkey",
+          Tables(s, d, "customer").selectExpr("c_custkey",
             "c_acctbal",
             """CASE WHEN CAST(conv(substring(md5(
                  CAST(c_custkey AS STRING)), 1, 15), 16, 10) AS BIGINT)
                  % 2 = 0
                THEN 1 ELSE 0 END AS treated"""),
           10, Seq(col("c_acctbal").desc, col("c_custkey").asc), "decile")
-        val spend = t(s, d, "orders")
+        val spend = Tables(s, d, "orders")
           .groupBy(col("o_custkey").as("c_custkey"))
           .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
             .as("cents"))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,8 +27,6 @@ import graft.sources.Sinks
   *    pattern that pairs with q374's exactly-once SOURCE recovery.
   */
 object Training81 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
@@ -67,17 +66,13 @@ object Training81 {
         val stage = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_febcas_${Integer.toHexString(d.hashCode)}").toString
-        val stageFile = new java.io.File(stage)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        if (stageFile.exists()) rm(stageFile)
+        FileUtils.deleteQuietly(new java.io.File(stage))
         java.nio.file.Files.createDirectories(
           java.nio.file.Paths.get(s"$stage/in"))
         val snapRoot = s"$stage/snap"
         val ledger = java.nio.file.Paths.get(s"$stage/ledger")
         java.nio.file.Files.createDirectories(ledger)
-        t(s, d, "orders").selectExpr("o_orderkey AS k",
+        Tables(s, d, "orders").selectExpr("o_orderkey AS k",
             "o_orderpriority AS pri",
             "CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents",
             "CAST(0 AS BIGINT) AS v")
@@ -122,9 +117,9 @@ object Training81 {
 
   /** The q408 join body, shared with the spec's plan pin. */
   def bloomJoin(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem").select("l_orderkey", "l_returnflag",
+    val li = Tables(s, d, "lineitem").select("l_orderkey", "l_returnflag",
       "l_extendedprice")
-    val ord = t(s, d, "orders")
+    val ord = Tables(s, d, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select("o_orderkey")
     li.join(ord, col("l_orderkey") === col("o_orderkey"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -27,16 +27,14 @@ import graft.{QueryDef, Tables}
   *    discipline (q46).
   */
 object Training82 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
       "q410_theil_decomposition",
       (s, d) => {
-        val rows = t(s, d, "orders")
-          .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-          .join(broadcast(t(s, d, "nation")),
+        val rows = Tables(s, d, "orders")
+          .join(Tables(s, d, "customer"), col("o_custkey") === col("c_custkey"))
+          .join(broadcast(Tables(s, d, "nation")),
             col("c_nationkey") === col("n_nationkey"))
           .selectExpr("n_name",
             "CAST(round(o_totalprice * 100, 0) AS BIGINT) AS x",
@@ -128,7 +126,7 @@ object Training82 {
     QueryDef(
       "q411_share_of_parent",
       (s, d) => {
-        val leaf = t(s, d, "orders")
+        val leaf = Tables(s, d, "orders")
           .selectExpr("substring(CAST(o_orderdate AS STRING), 1, 7) AS month",
             "o_orderpriority AS pri",
             "CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents")
@@ -163,7 +161,7 @@ object Training82 {
     QueryDef(
       "q412_sparse_dot_topk",
       (s, d) => {
-        val w6 = t(s, d, "embeddings")
+        val w6 = Tables(s, d, "embeddings")
           .selectExpr("vec_id",
             "posexplode(embedding) AS (dim, xv)")
           .selectExpr("vec_id", "dim",

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -29,8 +30,6 @@ import graft.operators.{Similarity, VectorOps}
   *    over the part DICTIONARY, never the fact).
   */
 object Training83 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
@@ -39,12 +38,8 @@ object Training83 {
         val root = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_ivfinc_${Integer.toHexString(d.hashCode)}").toString
-        val rootFile = new java.io.File(root)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        if (rootFile.exists()) rm(rootFile)
-        val emb = t(s, d, "embeddings")
+        FileUtils.deleteQuietly(new java.io.File(root))
+        val emb = Tables(s, d, "embeddings")
           .withColumn("vec", expr("transform(embedding, x -> cast(x as double))"))
           .select("vec_id", "vec")
         Similarity.buildIvfIndex(emb.filter(pmod(col("vec_id"), lit(5)) =!= 0),
@@ -78,7 +73,7 @@ object Training83 {
     QueryDef(
       "q414_markov_removal_attribution",
       (s, d) => {
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .select(col("user_id"), to_date(col("ts")).as("day"),
             col("ts"), col("event_id"), col("event_type"))
         val w = org.apache.spark.sql.expressions.Window
@@ -197,7 +192,7 @@ object Training83 {
       "q415_topn_other_rollup",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val perPart = t(s, d, "lineitem")
+        val perPart = Tables(s, d, "lineitem")
           .groupBy(col("l_partkey"))
           .agg(sum(expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)"))
             .as("cents"), count(lit(1)).as("n_lines"))

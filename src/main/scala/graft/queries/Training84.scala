@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -25,8 +26,6 @@ import graft.{QueryDef, Tables}
   *    coverage for the SQL surface).
   */
 object Training84 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
@@ -34,7 +33,7 @@ object Training84 {
       (s, d) => {
         val gap = """CASE WHEN event_type = 'view'
             THEN '30 minutes' ELSE '5 minutes' END"""
-        t(s, d, "events")
+        Tables(s, d, "events")
           .groupBy(col("user_id"),
             session_window(col("ts"), expr(gap)).as("w"))
           .agg(count(lit(1)).as("n_events"))
@@ -82,13 +81,9 @@ object Training84 {
         val root = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_orphan_${Integer.toHexString(d.hashCode)}").toString
-        val rootFile = new java.io.File(root)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        if (rootFile.exists()) rm(rootFile)
+        FileUtils.deleteQuietly(new java.io.File(root))
         // commit: exactly 4 data files + a manifest naming them
-        t(s, d, "orders").select("o_orderkey", "o_totalprice")
+        Tables(s, d, "orders").select("o_orderkey", "o_totalprice")
           .repartition(4)
           .write.mode("overwrite").parquet(s"$root/data")
         val committed = new java.io.File(s"$root/data").listFiles()
@@ -120,7 +115,7 @@ object Training84 {
     QueryDef(
       "q418_pattern_predicates",
       (s, d) => {
-        t(s, d, "part").createOrReplaceTempView("graft_part_pp")
+        Tables(s, d, "part").createOrReplaceTempView("graft_part_pp")
         s.sql("""
           SELECT
             CAST(count_if(p_name LIKE ANY ('%red%', '%blue%')) AS BIGINT)

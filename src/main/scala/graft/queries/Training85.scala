@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -26,8 +27,6 @@ import graft.{QueryDef, Tables}
   *    story.
   */
 object Training85 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
@@ -40,8 +39,8 @@ object Training85 {
         val saved = s.conf.getOption("spark.sql.adaptive.enabled")
         val rows = try {
           s.conf.set("spark.sql.adaptive.enabled", "false")
-          val li = t(s, d, "lineitem").select("l_orderkey", "l_extendedprice")
-          val ord = t(s, d, "orders")
+          val li = Tables(s, d, "lineitem").select("l_orderkey", "l_extendedprice")
+          val ord = Tables(s, d, "orders")
             .filter(col("o_orderpriority") === "1-URGENT")
             .select("o_orderkey")
           val star = li.join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -95,7 +94,7 @@ object Training85 {
     QueryDef(
       "q420_nested_array_analytics",
       (s, d) => {
-        val nested = t(s, d, "lineitem")
+        val nested = Tables(s, d, "lineitem")
           .selectExpr("l_orderkey",
             """named_struct(
                  'cents', CAST(round(l_extendedprice * 100, 0) AS BIGINT),
@@ -134,12 +133,8 @@ object Training85 {
         val root = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
           s"graft_rollback_${Integer.toHexString(d.hashCode)}").toString
-        val rootFile = new java.io.File(root)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        if (rootFile.exists()) rm(rootFile)
-        val base = t(s, d, "orders").selectExpr("o_orderkey AS k",
+        FileUtils.deleteQuietly(new java.io.File(root))
+        val base = Tables(s, d, "orders").selectExpr("o_orderkey AS k",
           "CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents",
           "CAST(0 AS BIGINT) AS v")
         base.write.mode("overwrite").parquet(s"$root/v0")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -25,15 +25,13 @@ import graft.{QueryDef, Tables}
   *    measure-group form of q79/q262's single-measure unpivot).
   */
 object Training86 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
       "q422_generalization_lattice",
       (s, d) => {
-        val base = t(s, d, "customer")
-          .join(broadcast(t(s, d, "nation")),
+        val base = Tables(s, d, "customer")
+          .join(broadcast(Tables(s, d, "nation")),
             col("c_nationkey") === col("n_nationkey"))
           .selectExpr("n_name", "c_mktsegment",
             "CAST(round(c_acctbal, 0) AS BIGINT) div 1000 AS bal_k")
@@ -94,7 +92,7 @@ object Training86 {
       (s, d) => {
         // short window: per (day, hour); long window: per day; budget:
         // 2% error rate; alert when BOTH burn rates exceed 2×
-        val ev = t(s, d, "events").selectExpr("to_date(ts) AS day",
+        val ev = Tables(s, d, "events").selectExpr("to_date(ts) AS day",
           "hour(ts) AS hr",
           "CASE WHEN event_type = 'error' THEN 1L ELSE 0L END AS err")
           .localCheckpoint()
@@ -143,7 +141,7 @@ object Training86 {
       (s, d) => {
         // build the wide frame (columns A_cents, A_qty, N_cents, …)
         // then UNPIVOT with measure GROUPS restores the long form
-        t(s, d, "lineitem").selectExpr(
+        Tables(s, d, "lineitem").selectExpr(
           "CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS c0",
           "CAST(l_quantity AS BIGINT) AS q0",
           "l_returnflag")

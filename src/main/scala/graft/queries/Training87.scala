@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -22,8 +22,6 @@ import graft.{QueryDef, Tables}
   *    leaf needed per root assembly.
   */
 object Training87 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** q426's closed form: the BOM tree is implicit arithmetic (parent =
     * key div 4, multiplicity = node % 3 + 1), so each leaf's root,
     * depth, and path-multiplicity product are per-row KeyHierarchy
@@ -60,7 +58,7 @@ object Training87 {
         // borderline named. Bit-identical ranks, nothing data-sized in
         // one task.
         val keys = graft.operators.ScalableRank.withRowNumber(
-          t(s, d, "lineitem")
+          Tables(s, d, "lineitem")
             .selectExpr("CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS k")
             .distinct(),
           Seq(col("k")), "__rn")
@@ -158,7 +156,7 @@ object Training87 {
     QueryDef(
       "q426_bom_explosion",
       (s, d) => {
-        val parts = t(s, d, "part")
+        val parts = Tables(s, d, "part")
         val nParts = parts.count()
         // Scale dispatch (the q200/autoTopK pattern): parent and
         // multiplicity are pure arithmetic, so above the limit the

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -22,14 +22,12 @@ import graft.{QueryDef, Tables}
   *    census proves both forms resolve correctly.
   */
 object Training88 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
       "q427_maxmin_fair_allocation",
       (s, d) => {
-        val demands = t(s, d, "orders")
+        val demands = Tables(s, d, "orders")
           .groupBy(col("o_custkey").as("cust"))
           .agg(count(lit(1)).as("demand"))
           .localCheckpoint() // capacity agg + waterline pass read it
@@ -98,7 +96,7 @@ object Training88 {
     QueryDef(
       "q428_select_except_star",
       (s, d) => {
-        t(s, d, "orders").selectExpr("o_orderkey",
+        Tables(s, d, "orders").selectExpr("o_orderkey",
           """named_struct('pri', o_orderpriority,
                'cents', CAST(round(o_totalprice * 100, 0) AS BIGINT))
              AS payload""",

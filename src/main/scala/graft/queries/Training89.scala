@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -34,8 +34,6 @@ import graft.operators.{EquiDepthBins, TextOps}
   *    arm-keyed window pass — no single-partition exchange.
   */
 object Training89 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   // ---- q430 plan-time ring construction (deterministic md5, identical
   // to the hash60 both dialects compute at runtime for the KEYS).
   private def md5hex(x: String): String =
@@ -79,7 +77,7 @@ object Training89 {
       "q429_weighted_reservoir_sample",
       (s, d) => {
         val h = TextOps.hash60Spark("concat('wrs:', cast(o_orderkey as string))")
-        t(s, d, "orders").selectExpr(
+        Tables(s, d, "orders").selectExpr(
           "o_orderkey",
           "CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents",
           s"CAST(round(-ln((($h % 1000000) + 1) / 1000001.0) * 1000000, 0) AS BIGINT) AS lmicro")
@@ -104,7 +102,7 @@ object Training89 {
         val (posA, ownA) = ring(8, 16)
         val (posB, ownB) = ring(9, 16)
         val kpos = s"(${TextOps.hash60Spark("concat('key:', cast(o_orderkey as string))")} % ${RingMod}L)"
-        t(s, d, "orders")
+        Tables(s, d, "orders")
           .selectExpr(
             s"${ownerExpr(kpos, posA, ownA)} AS shard_a",
             s"${ownerExpr(kpos, posB, ownB)} AS shard_b")
@@ -145,7 +143,7 @@ object Training89 {
         val succ = s"(${TextOps.hash60Spark("concat('sprt:', cast(event_id as string))")} % 100) < " +
           "(CASE WHEN length(event_type) % 2 = 0 THEN 60 ELSE 50 END)"
         val w = Window.partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-        val walk = t(s, d, "events")
+        val walk = Tables(s, d, "events")
           .selectExpr("event_type AS arm", "ts", "event_id",
             s"CASE WHEN $succ THEN ${SInc}L ELSE ${FInc}L END AS inc")
           .withColumn("n", row_number().over(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,8 +19,6 @@ import graft.{QueryDef, Tables}
   *    cents string so no float log appears anywhere.
   */
 object Training9 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- mergeable-HLL contract: daily user sketches per event type,
@@ -32,7 +29,7 @@ object Training9 {
     QueryDef(
       "q156_hll_merge",
       (s, d) => {
-        val ev = t(s, d, "events").select(col("event_type"), col("user_id"),
+        val ev = Tables(s, d, "events").select(col("event_type"), col("user_id"),
           date_trunc("day", col("ts")).cast("date").as("day"))
         val daily = ev.groupBy("event_type", "day")
           .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"))
@@ -70,7 +67,7 @@ object Training9 {
           .mkString("CASE digit ", " ", " END")
         // the 9-row digit table is localCheckpointed so the total
         // branch folds it instead of re-running the data-sized agg
-        val digits = t(s, d, "lineitem")
+        val digits = Tables(s, d, "lineitem")
           .select(expr("""CAST(substr(CAST(CAST(round(l_extendedprice * 100, 0) AS BIGINT)
                           AS STRING), 1, 1) AS BIGINT)""").as("digit"))
           .groupBy("digit").agg(count(lit(1)).as("n_obs"))
@@ -113,7 +110,7 @@ object Training9 {
     QueryDef(
       "q158_hill_tail",
       (s, d) => {
-        val deg = t(s, d, "lineitem")
+        val deg = Tables(s, d, "lineitem")
           .groupBy("l_suppkey")
           .agg(countDistinct("l_partkey").as("degree"))
         val top = deg.orderBy(col("degree").desc, col("l_suppkey").asc)
@@ -154,7 +151,7 @@ object Training9 {
     QueryDef(
       "q159_fertility",
       (s, d) =>
-        t(s, d, "documents")
+        Tables(s, d, "documents")
           .groupBy("lang", "source")
           .agg(count(lit(1)).as("n_docs"),
             sum(expr("size(split(text, ' '))")).as("n_tokens"),
@@ -188,7 +185,7 @@ object Training9 {
     QueryDef(
       "q160_mutual_information",
       (s, d) => {
-        val cells = t(s, d, "documents")
+        val cells = Tables(s, d, "documents")
           .groupBy("source", "lang").agg(count(lit(1)).as("cxy"))
           .localCheckpoint()
         val mx = cells.groupBy("source").agg(sum("cxy").as("cx"))
@@ -241,7 +238,7 @@ object Training9 {
     QueryDef(
       "q161_anomaly_days",
       (s, d) => {
-        val daily = t(s, d, "events")
+        val daily = Tables(s, d, "events")
           .groupBy(col("event_type"),
             date_trunc("day", col("ts")).cast("date").as("day"))
           .agg(count(lit(1)).as("x"))
@@ -290,7 +287,7 @@ object Training9 {
       (s, d) => {
         val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
           .rowsBetween(Window.unboundedPreceding, -1)
-        val ev = t(s, d, "events")
+        val ev = Tables(s, d, "events")
           .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
           .withColumn("last_view_us",
             last(when(col("event_type") === "view", unix_micros(col("ts"))), true)
@@ -336,7 +333,7 @@ object Training9 {
     QueryDef(
       "q163_variant_json",
       (s, d) =>
-        t(s, d, "events")
+        Tables(s, d, "events")
           .select(col("event_type"),
             expr("variant_get(parse_json(props), '$.k', 'int')").as("k"))
           .groupBy(col("event_type"), expr("k % 7").as("k_mod7"))
@@ -367,7 +364,7 @@ object Training9 {
           CAST(l_suppkey AS STRING),
           CAST(CAST(round(l_quantity * 100, 0) AS BIGINT) AS STRING),
           CAST(CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS STRING))"""
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .select(expr(hash60Spark(rowStr)).as("h"))
           .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("digest"))
       },
@@ -401,7 +398,7 @@ object Training9 {
         // times inside the de job — the expensive stage of the whole
         // query, and the term that made the 10x ScaleCheck ratio
         // superlinear before the checkpoint.
-        val e = graft.operators.Graphs.coPurchaseEdges(t(s, d, "lineitem"))
+        val e = graft.operators.Graphs.coPurchaseEdges(Tables(s, d, "lineitem"))
         // low-(degree, id) → high-(degree, id) orientation of an edge
         // list: out-degree is O(√m) on ANY graph
         def orient(edges: org.apache.spark.sql.DataFrame) = {

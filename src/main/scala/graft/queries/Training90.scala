@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -38,8 +38,6 @@ import graft.{QueryDef, Tables}
   *    windows run over the day×arm dictionary.
   */
 object Training90 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   private def mlog(x: Double): Long = math.round(math.log(x) * 1e6)
   // q433 field weights (m, u) in micro-nats
   private val NameA = mlog(0.95 / 0.05); private val NameD = mlog(0.05 / 0.95)
@@ -187,7 +185,7 @@ object Training90 {
         // corpus). A chained-CTE SQL form measured 8.5 s of re-inlined
         // tiny stages; per-level localCheckpoints still 3.6 s of job
         // overhead; this form is the scan + one collect.
-        t(s, d, "orders").createOrReplaceTempView("graft_haar_orders")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_haar_orders")
         val g = new Array[Long](256)
         s.sql(haarGridSql(spark = true, "graft_haar_orders")).collect()
           .foreach(r => g(r.getInt(0)) = r.getLong(1))
@@ -226,7 +224,7 @@ object Training90 {
     QueryDef(
       "q433_fellegi_sunter_linkage",
       (s, d) => {
-        t(s, d, "part").createOrReplaceTempView("graft_fs_part")
+        Tables(s, d, "part").createOrReplaceTempView("graft_fs_part")
         s.sql(fsSql("graft_fs_part"))
       },
       Some(fsSql("part"))),
@@ -234,7 +232,7 @@ object Training90 {
     QueryDef(
       "q434_ftl_expert_replay",
       (s, d) => {
-        t(s, d, "events").createOrReplaceTempView("graft_ftl_events")
+        Tables(s, d, "events").createOrReplaceTempView("graft_ftl_events")
         s.sql(ftlSql(spark = true, "graft_ftl_events"))
       },
       Some(ftlSql(spark = false, "events"))),

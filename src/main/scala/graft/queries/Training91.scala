@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -32,8 +32,6 @@ import graft.{QueryDef, Tables}
   *    test for.
   */
 object Training91 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** 64-slot date-gridded revenue in $1000 units, per dialect. */
   private def gridSql(spark: Boolean, ordersRel: String): String = {
     val dd = if (spark) "datediff(o_orderdate, mind)" else "date_diff('day', mind, o_orderdate)"
@@ -89,7 +87,7 @@ object Training91 {
     QueryDef(
       "q435_voptimal_histogram",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_vopt_orders")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_vopt_orders")
         val g = new Array[Long](64)
         s.sql(gridSql(spark = true, "graft_vopt_orders")).collect()
           .foreach(r => g(r.getInt(0)) = r.getLong(1))
@@ -126,7 +124,7 @@ object Training91 {
         // rows, fixed by the price domain — and (b) ONE bucket's cents
         // dictionary (≤4096 rows by construction). Driver touches only
         // scalars (n, bucket ids, the two quantiles).
-        val cents = t(s, d, "orders")
+        val cents = Tables(s, d, "orders")
           .selectExpr("CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents")
           .localCheckpoint(true) // histogram, two bucket slices, final agg
         val nRows = cents.count()
@@ -194,8 +192,8 @@ object Training91 {
     QueryDef(
       "q437_simpsons_paradox",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_sp_orders")
-        t(s, d, "customer").createOrReplaceTempView("graft_sp_customer")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_sp_orders")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_sp_customer")
         s.sql(simpsonSql("graft_sp_orders", "graft_sp_customer"))
       },
       Some(simpsonSql("orders", "customer"))),

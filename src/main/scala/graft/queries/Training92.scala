@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -33,17 +33,15 @@ import graft.{QueryDef, Tables}
   *    pipeline should run on itself.
   */
 object Training92 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
       "q438_yannakakis_reducer",
       (s, d) => {
-        val region = t(s, d, "region").filter(col("r_name").isin("ASIA", "EUROPE"))
-        val nation = t(s, d, "nation")
-        val customer = t(s, d, "customer")
-        val orders = t(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT")
+        val region = Tables(s, d, "region").filter(col("r_name").isin("ASIA", "EUROPE"))
+        val nation = Tables(s, d, "nation")
+        val customer = Tables(s, d, "customer")
+        val orders = Tables(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT")
         // bottom-up semi-join reduction (root = orders)
         val nationR = nation.join(broadcast(region),
           nation("n_regionkey") === region("r_regionkey"), "left_semi")
@@ -111,8 +109,8 @@ object Training92 {
     QueryDef(
       "q439_kaplan_meier",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_km_orders")
-        t(s, d, "lineitem").createOrReplaceTempView("graft_km_lineitem")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_km_orders")
+        Tables(s, d, "lineitem").createOrReplaceTempView("graft_km_lineitem")
         s.sql("""
           WITH durations AS (
             SELECT o.o_orderkey,
@@ -169,8 +167,8 @@ object Training92 {
     QueryDef(
       "q440_littles_law_audit",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_ll_orders")
-        t(s, d, "lineitem").createOrReplaceTempView("graft_ll_lineitem")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_ll_orders")
+        Tables(s, d, "lineitem").createOrReplaceTempView("graft_ll_lineitem")
         s.sql(littleSql(spark = true,
           "graft_ll_orders", "graft_ll_lineitem"))
       },

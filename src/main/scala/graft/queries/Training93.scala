@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -27,8 +27,6 @@ import graft.{QueryDef, Tables}
   *    directional rules with the lift>1 reading.
   */
 object Training93 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   // q442 plan-time query set: (qid, a, b, k=⌊log2(b-a)⌋, 2^k)
   private val RmqQueries: Seq[(Int, Int, Int, Int, Int)] =
     Seq((0, 0, 256), (1, 5, 9), (2, 17, 81), (3, 100, 228), (4, 32, 33),
@@ -182,7 +180,7 @@ object Training93 {
     QueryDef(
       "q441_wasserstein_drift",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_w1_orders")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_w1_orders")
         s.sql(wassersteinSql(spark = true, "graft_w1_orders"))
       },
       Some(wassersteinSql(spark = false, "orders"))),
@@ -190,7 +188,7 @@ object Training93 {
     QueryDef(
       "q442_sparse_table_rmq",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_rmq_orders")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_rmq_orders")
         s.sql(rmqSql(spark = true, "graft_rmq_orders"))
       },
       Some(rmqSql(spark = false, "orders"))),
@@ -198,7 +196,7 @@ object Training93 {
     QueryDef(
       "q443_association_rules",
       (s, d) => {
-        t(s, d, "lineitem").createOrReplaceTempView("graft_ar_lineitem")
+        Tables(s, d, "lineitem").createOrReplaceTempView("graft_ar_lineitem")
         val op = graft.Iterate.ckpt(s.sql(rulesOpSql("graft_ar_lineitem")))
         op.createOrReplaceTempView("graft_ar_op")
         val item = graft.Iterate.ckpt(s.sql(rulesItemSql("graft_ar_op")))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -31,8 +31,6 @@ import graft.{QueryDef, Tables}
   *    zero floating point until the final ppm.
   */
 object Training94 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   /** q444 base-views SQL (the one fact-table pass), per dialect. */
   private def viewsSql(ordersRel: String, custRel: String): String = {
     val dims = Seq("n", "s", "p")
@@ -155,8 +153,8 @@ object Training94 {
         // measure the 8 view sizes in one fact pass, then run the
         // greedy lattice algebra over the checkpointed 8-row relation
         // (the q432 split: never let CTE re-inlining touch the fact)
-        t(s, d, "orders").createOrReplaceTempView("graft_vs_orders")
-        t(s, d, "customer").createOrReplaceTempView("graft_vs_customer")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_vs_orders")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_vs_customer")
         s.sql(viewsSql("graft_vs_orders", "graft_vs_customer"))
           .localCheckpoint()
           .createOrReplaceTempView("graft_vs_views")
@@ -168,7 +166,7 @@ object Training94 {
     QueryDef(
       "q445_working_set_footprint",
       (s, d) => {
-        t(s, d, "events").createOrReplaceTempView("graft_ws_events")
+        Tables(s, d, "events").createOrReplaceTempView("graft_ws_events")
         s.sql(footprintSql(spark = true, "graft_ws_events"))
       },
       Some(footprintSql(spark = false, "events"))),
@@ -176,7 +174,7 @@ object Training94 {
     QueryDef(
       "q446_kendall_tau",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_kt_orders")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_kt_orders")
         s.sql(kendallSql(spark = true, "graft_kt_orders"))
       },
       Some(kendallSql(spark = false, "orders"))),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -35,8 +35,6 @@ import graft.operators.TextOps
   *    plus matched/dropped censuses.
   */
 object Training95 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   private def h60(spark: Boolean, e: String): String =
     if (spark) TextOps.hash60Spark(e) else TextOps.hash60Duck(e)
   private def cat(spark: Boolean)(a: String, b: String): String =
@@ -187,7 +185,7 @@ object Training95 {
     QueryDef(
       "q447_ams_f2_sketch",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_ams_orders")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_ams_orders")
         s.sql(amsSumsSql(spark = true, "graft_ams_orders"))
           .localCheckpoint() // 1 row × 16 estimators; unpivot re-reads it
           .createOrReplaceTempView("graft_ams_sums")
@@ -201,8 +199,8 @@ object Training95 {
     QueryDef(
       "q448_permutation_test",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_pt_orders")
-        t(s, d, "customer").createOrReplaceTempView("graft_pt_customer")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_pt_orders")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_pt_customer")
         s.sql(permPopSql("graft_pt_orders", "graft_pt_customer"))
           .createOrReplaceTempView("graft_pt_pop")
         s.sql(permObsSql("graft_pt_pop"))
@@ -223,8 +221,8 @@ object Training95 {
     QueryDef(
       "q449_coarsened_exact_matching",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_cem_orders")
-        t(s, d, "customer").createOrReplaceTempView("graft_cem_customer")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_cem_orders")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_cem_customer")
         s.sql(cemStrataSql(spark = true, "graft_cem_orders", "graft_cem_customer"))
           .localCheckpoint() // stratum dictionary; read by 2 aggs
           .createOrReplaceTempView("graft_cem_strata")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -32,8 +32,6 @@ import graft.{QueryDef, Tables}
   *    alerting.
   */
 object Training96 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   private def hullSql(ordersRel: String, custRel: String): String = s"""
     WITH pts AS (
       SELECT c.c_nationkey AS nation, c.c_mktsegment AS seg,
@@ -133,8 +131,8 @@ object Training96 {
     QueryDef(
       "q450_convex_extremes",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_ch_orders")
-        t(s, d, "customer").createOrReplaceTempView("graft_ch_customer")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_ch_orders")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_ch_customer")
         s.sql(hullSql("graft_ch_orders", "graft_ch_customer"))
       },
       Some(hullSql("orders", "customer"))),
@@ -142,8 +140,8 @@ object Training96 {
     QueryDef(
       "q451_allen_interval_census",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_ai_orders")
-        t(s, d, "lineitem").createOrReplaceTempView("graft_ai_lineitem")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_ai_orders")
+        Tables(s, d, "lineitem").createOrReplaceTempView("graft_ai_lineitem")
         s.sql(allenSql(spark = true, "graft_ai_orders", "graft_ai_lineitem"))
       },
       Some(allenSql(spark = false, "orders", "lineitem"))),
@@ -151,7 +149,7 @@ object Training96 {
     QueryDef(
       "q452_pid_autoscaler",
       (s, d) => {
-        t(s, d, "events").createOrReplaceTempView("graft_pid_events")
+        Tables(s, d, "events").createOrReplaceTempView("graft_pid_events")
         s.sql(pidSql(spark = true, "graft_pid_events"))
       },
       Some(pidSql(spark = false, "events"))),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -30,8 +30,6 @@ import graft.{QueryDef, Tables}
   *    stratified-sign analysis.
   */
 object Training97 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   private def mpSql(spark: Boolean, ordersRel: String): String = {
     val idiv = if (spark) "div" else "//"
     val leads = (0 to 6).map(k =>
@@ -170,7 +168,7 @@ object Training97 {
     QueryDef(
       "q453_matrix_profile_discord",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_mp_orders")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_mp_orders")
         s.sql(mpSql(spark = true, "graft_mp_orders"))
       },
       Some(mpSql(spark = false, "orders"))),
@@ -180,7 +178,7 @@ object Training97 {
       (s, d) => {
         // per-customer spend is data-sized: rank + running sum via the
         // two-phase prefix sum, never a global window over customers
-        val spend = t(s, d, "orders")
+        val spend = Tables(s, d, "orders")
           .groupBy(col("o_custkey"))
           .agg(expr("CAST(sum(CAST(round(o_totalprice, 0) AS BIGINT)) AS BIGINT)")
             .as("x"))
@@ -200,8 +198,8 @@ object Training97 {
     QueryDef(
       "q455_odds_ratio_suite",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_or_orders")
-        t(s, d, "customer").createOrReplaceTempView("graft_or_customer")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_or_orders")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_or_customer")
         s.sql(orSql(spark = true, "graft_or_orders", "graft_or_customer"))
       },
       Some(orSql(spark = false, "orders", "customer"))),

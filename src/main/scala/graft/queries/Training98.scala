@@ -34,8 +34,6 @@ import graft.{QueryDef, Tables}
   *    chained MATERIALIZED CTEs.
   */
 object Training98 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   private def condorcetSql(spark: Boolean, ordersRel: String, custRel: String): String = {
     val idiv = if (spark) "div" else "//"
     s"""
@@ -160,7 +158,7 @@ object Training98 {
       s: SparkSession, d: String,
       earlyExit: Boolean = true): (DataFrame, Int, Int) = {
     import org.apache.spark.sql.functions._
-    t(s, d, "part").createOrReplaceTempView("graft_pp_part")
+    Tables(s, d, "part").createOrReplaceTempView("graft_pp_part")
     val tasks0 = graft.Iterate.ckpt(
       s.sql(pertBaseSql(spark = true, "graft_pp_part")))
     // single-partition shaping is a SMALL-scale optimization (skips
@@ -268,8 +266,8 @@ object Training98 {
     QueryDef(
       "q456_condorcet_borda",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_cb_orders")
-        t(s, d, "customer").createOrReplaceTempView("graft_cb_customer")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_cb_orders")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_cb_customer")
         s.sql(condorcetSql(spark = true, "graft_cb_orders", "graft_cb_customer"))
       },
       Some(condorcetSql(spark = false, "orders", "customer"))),
@@ -277,7 +275,7 @@ object Training98 {
     QueryDef(
       "q457_banzhaf_power",
       (s, d) => {
-        t(s, d, "customer").createOrReplaceTempView("graft_bz_customer")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_bz_customer")
         s.sql(banzhafSql(spark = true, "graft_bz_customer"))
       },
       Some(banzhafSql(spark = false, "customer"))),

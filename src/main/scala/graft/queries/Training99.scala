@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.{Iterate, QueryDef, Tables}
 
@@ -29,8 +29,6 @@ import graft.{Iterate, QueryDef, Tables}
   *    construction, pinned in the spec.
   */
 object Training99 {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   // ---------------------------------------------------------------- q459
 
   /** Shared preference tables: propPref(prop, rk, rev) — segment ranks
@@ -200,8 +198,8 @@ object Training99 {
     QueryDef(
       "q459_stable_matching",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_gs_orders")
-        t(s, d, "customer").createOrReplaceTempView("graft_gs_customer")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_gs_orders")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_gs_customer")
         val base = gsBaseSql(spark = true, "graft_gs_orders", "graft_gs_customer")
         val ppref = Iterate.ckpt(s.sql(
           s"WITH $base SELECT * FROM ppref").coalesce(1))
@@ -243,9 +241,9 @@ object Training99 {
     QueryDef(
       "q460_huffman_lengths",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_hf_orders")
-        t(s, d, "customer").createOrReplaceTempView("graft_hf_customer")
-        t(s, d, "nation").createOrReplaceTempView("graft_hf_nation")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_hf_orders")
+        Tables(s, d, "customer").createOrReplaceTempView("graft_hf_customer")
+        Tables(s, d, "nation").createOrReplaceTempView("graft_hf_nation")
         val base = huffBaseSql(spark = true, "graft_hf_orders", "graft_hf_customer", "graft_hf_nation")
         val leaves = Iterate.ckpt(s.sql(s"WITH $base SELECT * FROM roots0").coalesce(1))
         leaves.createOrReplaceTempView("graft_hf_leaves")
@@ -279,7 +277,7 @@ object Training99 {
     QueryDef(
       "q461_dtw_alignment",
       (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("graft_dtw_orders")
+        Tables(s, d, "orders").createOrReplaceTempView("graft_dtw_orders")
         val base = dtwBaseSql(spark = true, "graft_dtw_orders")
         val sa = Iterate.ckpt(s.sql(s"WITH $base SELECT * FROM sa").coalesce(1))
         val sb = Iterate.ckpt(s.sql(s"WITH $base SELECT * FROM sb").coalesce(1))

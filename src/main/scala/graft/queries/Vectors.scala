@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
+import graft.Tables.embDouble
 import graft.functions.CosineSimilarity
 import graft.operators.Similarity
 import graft.operators.VectorOps._
@@ -20,12 +21,7 @@ import graft.operators.VectorOps._
   * higher-order-function folds over array<double> — codegen'd, no UDF.
   */
 object Vectors {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
-
   private val DIM = 64
-
-  private def embDouble(df: DataFrame): DataFrame =
-    df.withColumn("vec", expr("transform(embedding, x -> cast(x as double))"))
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -33,7 +29,7 @@ object Vectors {
     QueryDef(
       "q49_cosine_topk",
       (s, d) => {
-        val emb = embDouble(t(s, d, "embeddings"))
+        val emb = embDouble(Tables(s, d, "embeddings"))
         Similarity.bruteForceTopK(
           emb.filter(col("vec_id") < 20), emb, "vec_id", "vec", k = 3)
       },
@@ -60,7 +56,7 @@ object Vectors {
       "q50_ann_lsh",
       (s, d) =>
         Similarity.annTopK(
-          embDouble(t(s, d, "embeddings")), "vec_id", "vec", DIM,
+          embDouble(Tables(s, d, "embeddings")), "vec_id", "vec", DIM,
           queryFilter = col("vec_id") < 20, k = 3,
           tables = 2, planesPerTable = 4),
       Some(s"""
@@ -111,7 +107,7 @@ object Vectors {
         // for a JPEG/PNG lib call on a real deployment).
         import s.implicits._
         import graft.operators.BmpCodec
-        val imgs = t(s, d, "documents")
+        val imgs = Tables(s, d, "documents")
           .select(col("doc_id")).as[Long]
           .map { id =>
             val did = id % 1000000L
@@ -161,7 +157,7 @@ object Vectors {
       "q53_embedding_neardup",
       (s, d) =>
         Similarity.nearDupPairs(
-          embDouble(t(s, d, "embeddings")), "vec_id", "vec", DIM,
+          embDouble(Tables(s, d, "embeddings")), "vec_id", "vec", DIM,
           threshold = 0.35, planes = 8),
       Some(s"""
         WITH emb AS (
@@ -188,7 +184,7 @@ object Vectors {
       "q52_kmeans_embeddings",
       (s, d) =>
         graft.operators.DeterministicKMeans.clusterSizes(
-          t(s, d, "embeddings"), "vec_id", "embedding", k = 8, iters = 5),
+          Tables(s, d, "embeddings"), "vec_id", "embedding", k = 8, iters = 5),
       Some(graft.operators.DeterministicKMeans.clusterSizesDuck(
         "embeddings", "vec_id", "embedding", k = 8, iters = 5))),
 
@@ -200,7 +196,7 @@ object Vectors {
     QueryDef(
       "q84_embedding_dimstats",
       (s, d) =>
-        embDouble(t(s, d, "embeddings"))
+        embDouble(Tables(s, d, "embeddings"))
           .select(col("vec_id"), posexplode(col("vec")).as(Seq("dim", "x")))
           .groupBy(col("dim").cast("long").as("dim"))
           .agg(
@@ -230,7 +226,7 @@ object Vectors {
     QueryDef(
       "q130_matryoshka_recall",
       (s, d) => {
-        val emb = embDouble(t(s, d, "embeddings")).cache()
+        val emb = embDouble(Tables(s, d, "embeddings")).cache()
         try {
           val q = col("vec_id") < 10
           val full = Similarity

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{Num, QueryDef, Tables}
 import graft.operators.IqrOutlierFilter
@@ -12,7 +12,6 @@ import graft.operators.IqrOutlierFilter
   * pinned against DuckDB on lineitem.
   */
 object WaferOps {
-  private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
   import Num.dsumSql
 
   /** Deterministic population-std z-score ingredients via exact decimal
@@ -29,7 +28,7 @@ object WaferOps {
     QueryDef(
       "q21_group_quantiles",
       (s, d) =>
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .groupBy("l_returnflag")
           .agg(
             round(expr("percentile(l_quantity, 0.25)"), 4).as("q25"),
@@ -51,7 +50,7 @@ object WaferOps {
       "q22_iqr_outlier_filter",
       (s, d) =>
         IqrOutlierFilter(
-          t(s, d, "lineitem"),
+          Tables(s, d, "lineitem"),
           groupCols = Seq("l_returnflag"),
           valueCols = Seq("l_quantity", "l_extendedprice"))
           .select("l_orderkey", "l_linenumber"),
@@ -84,7 +83,7 @@ object WaferOps {
     QueryDef(
       "q23_zscore",
       (s, d) => {
-        val li = t(s, d, "lineitem")
+        val li = Tables(s, d, "lineitem")
         val mc = momentCols("l_extendedprice")
         val stats = li.groupBy("l_returnflag")
           .agg(mc.head, mc.tail: _*)
@@ -109,7 +108,7 @@ object WaferOps {
     QueryDef(
       "q24_engineered_features",
       (s, d) =>
-        t(s, d, "lineitem").select(
+        Tables(s, d, "lineitem").select(
           col("l_orderkey"),
           col("l_linenumber"),
           (col("l_extendedprice") / (col("l_quantity") + lit(1e-6))).as("price_per_qty"),
@@ -133,7 +132,7 @@ object WaferOps {
     QueryDef(
       "q25_rule_label",
       (s, d) =>
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .withColumn("is_killer",
             when(col("l_returnflag") === "R" && col("l_linestatus") === "F"
               && col("l_quantity") > 45, lit(true))

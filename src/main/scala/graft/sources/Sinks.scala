@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -156,10 +157,7 @@ object Sinks {
             java.nio.file.Paths.get(s"$root/v$next"))) throw e
         // lost the race: discard the stale stage; the caller re-reads
         // latest and re-merges
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(stagedDir))
+        FileUtils.deleteQuietly(new java.io.File(stagedDir))
         false
     }
   }
@@ -345,8 +343,7 @@ object Sinks {
     expired.foreach { v =>
       val dir = new java.io.File(s"$root/v$v")
       new java.io.File(dir, "_SUCCESS").delete()
-      Option(dir.listFiles()).foreach(_.foreach(f => { f.delete(); () }))
-      dir.delete()
+      FileUtils.deleteQuietly(dir)
     }
     expired
   }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -249,11 +250,7 @@ object EventStreams {
   def stagedBatchesStream(stageRoot: String, batches: Seq[DataFrame]): DataFrame = {
     require(batches.nonEmpty, "stagedBatchesStream: no batches")
     val spark = batches.head.sparkSession
-    val rootFile = new java.io.File(stageRoot)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    if (rootFile.exists()) rm(rootFile)
+    FileUtils.deleteQuietly(new java.io.File(stageRoot))
     val streamDir = java.nio.file.Paths.get(stageRoot, "stream")
     java.nio.file.Files.createDirectories(streamDir)
     val t0 = System.currentTimeMillis()

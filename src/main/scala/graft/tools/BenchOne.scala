@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev timer for a single declared query, matching Bench's measurement
   * (noop-write materialization, warm-then-time). Not part of the driver
   * contract; run via
@@ -19,15 +17,7 @@ object BenchOne {
       case Array(k, v) => Some(k -> v)
       case _ => None
     })
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus)
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
 
     val q = graft.SparkEntry.queries(name)

@@ -291,21 +291,14 @@ object WaferPipeline {
           } finally cached.unpersist()
       }
     }
-    // Steps are independent → fit them concurrently by default: each
-    // fit is a latency-bound chain of jobs, so overlapping the three
-    // chains is genuine throughput (same-box A/B, r13: sequential
-    // wafer median 5.38 s vs concurrent 2.66 s).
-    // `spark.graft.wafer.concurrentFits=false` pins them sequential
-    // for measurement experiments; results are identical either way
-    // (fits are per-step independent).
-    val concurrent = df.sparkSession.conf
-      .get("spark.graft.wafer.concurrentFits", "true").toBoolean
-    val labelParts =
-      if (concurrent)
-        Await.result(
-          Future.sequence(steps.map(step => Future(fitStep(step)))),
-          Duration.Inf).flatten
-      else steps.flatMap(fitStep)
+    // Steps are independent → fit them concurrently: each fit is a
+    // latency-bound chain of jobs, so overlapping the three chains is
+    // genuine throughput (same-box A/B, r13: sequential wafer median
+    // 5.38 s vs concurrent 2.66 s). Fits are per-step independent and
+    // seed-pinned, so the order they finish in changes no assignment.
+    val labelParts = Await.result(
+      Future.sequence(steps.map(step => Future(fitStep(step)))),
+      Duration.Inf).flatten
     val out =
       if (labelParts.isEmpty)
         withId.withColumn("KMeans_Cluster", lit(null).cast(IntegerType))

@@ -1,13 +1,15 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
 /** The one compilation unit that lives inside Spark's package tree: the
-  * two `private[sql]` hops a library needs to offer DataFrame-valued
-  * custom operators — wrap a hand-built LogicalPlan as a DataFrame, and
-  * read a DataFrame's analyzed plan to resolve expressions against.
+  * `private[sql]` hops a library needs to offer custom operators and
+  * expressions — wrap a hand-built LogicalPlan as a DataFrame, read a
+  * DataFrame's analyzed plan to resolve expressions against, and move
+  * between a Column and the Catalyst expression behind it.
   * (The standard extension-library pattern; everything else in graft
   * stays outside the spark namespace.)
   */
@@ -24,4 +26,11 @@ object PlanApi {
     */
   def resolver(spark: SparkSession): (String, String) => Boolean =
     spark.asInstanceOf[classic.SparkSession].sessionState.analyzer.resolver
+
+  /** A Column over a hand-built Catalyst expression: no session
+    * function-registry entry is needed to put one in a plan.
+    */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 }

@@ -6,13 +6,21 @@ package graft
   */
 object JvmRef {
 
+  /** Sign-safe half-up integer division s/n (n > 0). */
+  def halfUp(s: Long, n: Long): Long =
+    if (s < 0) -((2 * -s + n) / (2 * n)) else (2 * s + n) / (2 * n)
+
+  /** Half-up rounding to 6 decimals of the double's shortest decimal. */
+  def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Lower-case hex md5 of the UTF-8 bytes. */
+  def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
   /** The engine's 60-bit md5 hash, re-implemented from MessageDigest. */
-  def hash60(s: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s.getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString.substring(0, 15)
-    java.lang.Long.parseLong(hex, 16)
-  }
+  def hash60(s: String): Long = java.lang.Long.parseLong(md5Hex(s).take(15), 16)
 
   /** From-scratch Lloyd's matching the DeterministicKMeans spec:
     * micro-unit vectors, seeds = k smallest (hash60(id), id), argmin
@@ -36,8 +44,7 @@ object JvmRef {
         val n = ms.size.toLong
         (0 until cents(0).length).foreach { i =>
           val s = ms.map(_._2(i)).sum
-          next(c)(i) =
-            if (s < 0) -((2 * -s + n) / (2 * n)) else (2 * s + n) / (2 * n)
+          next(c)(i) = halfUp(s, n)
         }
       }
       cents = next

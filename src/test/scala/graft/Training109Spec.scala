@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import JvmRef.hash60
+
 /** Invariants for the hundred-ninth wave:
   *
   *  - q487: JVM replay of both partitionings (sample → bounds →
@@ -17,11 +19,6 @@ class Training109Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
-
-  private def hash60(s: String): Long =
-    java.lang.Long.parseLong(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(15), 16)
 
   test("q487: JVM partitioning replay; balance laws") {
     val keys = Tables(spark, dir, "lineitem").select("l_orderkey")

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import JvmRef.round6
+
 /** Invariants for the eleventh wave (q174-q180) beyond the row/hash
   * oracle: each statistic is recomputed independently in plain JVM
   * Scala from the same collected inputs (different formulation, same
@@ -15,8 +17,6 @@ class Training11Spec extends SparkSpec {
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
 
   private def halfUp(s: BigInt, n: BigInt): BigInt = (2 * s + n) / (2 * n)
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("q174: Spearman rho matches a JVM doubled-midrank recount, in [-1, 1]") {
     val items = Tables(spark, dir, "lineitem")

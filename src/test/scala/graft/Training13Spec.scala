@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import JvmRef.hash60
+
 /** Invariants for the thirteenth wave (q187-q190): each statistic is
   * recomputed in plain JVM Scala — including the md5-derived 60-bit
   * hash behind the bootstrap multipliers — plus the structural
@@ -16,11 +18,6 @@ class Training13Spec extends SparkSpec {
   private def halfUp(s: BigInt, n: BigInt): BigInt = (2 * s + n) / (2 * n)
 
   /** JVM mirror of TextOps.hash60*: first 15 md5 hex digits as a long. */
-  private def hash60(s: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.take(15), 16)
-  }
 
   test("q187: replicate means, CI order statistics, and the CI bracket recount") {
     val xs = Tables(spark, dir, "orders")

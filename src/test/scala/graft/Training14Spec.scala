@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextOps
+import JvmRef.{hash60, md5Hex}
 
 /** Invariants for the fourteenth wave (q191-q193): a COMPLETE plain-JVM
   * mirror of the MinHash pipeline — word hashing, 3-gram shift-xor
@@ -17,11 +18,6 @@ class Training14Spec extends SparkSpec {
 
   private def halfUp(s: Long, n: Long): Long = (2 * s + n) / (2 * n)
   private val mask60 = (1L << 60) - 1
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  private def hash60(s: String): Long = java.lang.Long.parseLong(md5Hex(s).take(15), 16)
 
   /** JVM mirror of wordHashes → ngramHashes(3) (distinct, short-doc fallback). */
   private def ngramHashes(text: String): Seq[Long] = {

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import JvmRef.{hash60, round6}
+
 /** Invariants for the fifteenth wave (q194-q198): every statistic is
   * recomputed in plain JVM Scala (BigInt moments, md5-derived HRW
   * scores), plus the structural properties a wrong implementation
@@ -14,19 +16,11 @@ class Training15Spec extends SparkSpec {
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
 
   /** JVM mirror of TextOps.hash60*: first 15 md5 hex digits as a long. */
-  private def hash60(s: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.take(15), 16)
-  }
 
   private def hrw(id: Long, n: Int): Long =
     (0 until n).map { s =>
       (hash60(s"$id#$s") % 36028797018963968L) * 16L + s
     }.max % 16
-
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("q194: HRW shards, movers, and id sums match a JVM recount; churn is ~1/9") {
     val ids = Tables(spark, dir, "documents")

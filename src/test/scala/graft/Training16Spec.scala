@@ -1,5 +1,7 @@
 package graft
 
+import JvmRef.round6
+
 /** Invariants for the sixteenth wave (q199-q204): every query is
   * recomputed in plain JVM Scala from the raw sf0.001 tables — the
   * lateral top-k against a sort-take, the recursive rollup against an
@@ -12,9 +14,6 @@ class Training16Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
-
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("q199: lateral top-3 equals a JVM sort-take per nation") {
     val nations = Tables(spark, dir, "nation")

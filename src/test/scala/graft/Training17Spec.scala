@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import JvmRef.{hash60, md5Hex, round6}
+
 /** Invariants for the seventeenth wave (q205-q208), recomputed in plain
   * JVM Scala: the gap census against a sorted-ids walk, the
   * time-weighted average against a BigInt segment sweep, the
@@ -16,11 +18,6 @@ class Training17Spec extends SparkSpec {
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
 
   private val mask60 = (1L << 60) - 1
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  private def hash60(s: String): Long =
-    java.lang.Long.parseLong(md5Hex(s).take(15), 16)
 
   /** JVM mirror of wordHashes → ngramHashes(3) (distinct, short-doc fallback). */
   private def ngramHashes(text: String): Seq[Long] = {
@@ -32,9 +29,6 @@ class Training17Spec extends SparkSpec {
       else wh
     hs.distinct
   }
-
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("q205: gap census equals a sorted-ids JVM walk") {
     val ids = Tables(spark, dir, "events")

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import JvmRef.{hash60, round6}
+
 /** Invariants for the twentieth wave (q217-q220): JVM recounts of the
   * coverage curve, the correlated-sampling estimator (including the
   * slice-completeness property that makes it unbiased), the Neyman
@@ -12,15 +14,6 @@ class Training20Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  private def hash60(s: String): Long =
-    java.lang.Long.parseLong(md5Hex(s).take(15), 16)
-
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("q217: coverage curve equals a JVM ranked-vocab walk") {
     val words = Tables(spark, dir, "documents")

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import JvmRef.round6
+
 /** Invariants for the twenty-first wave (q221-q222): the conjunctive
   * search against a JVM set-containment scan, and the decile-mix
   * matrix against a JVM interpolated-quantile + fold recount — plus
@@ -12,9 +14,6 @@ class Training21Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
-
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("q221: conjunctive hits equal a JVM set-containment scan") {
     val docs = Tables(spark, dir, "documents")

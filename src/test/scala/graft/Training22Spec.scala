@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import JvmRef.round6
+
 /** Invariants for the twenty-second wave (q223-q224): the link scores
   * against a JVM neighbor-set mirror (including the top-20 tie order),
   * and the disorder profile against a sequential running-max fold —
@@ -11,9 +13,6 @@ class Training22Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
-
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("q223: top-20 link scores equal a JVM neighbor-set mirror") {
     val op = Tables(spark, dir, "lineitem")

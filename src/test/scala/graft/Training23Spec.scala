@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import JvmRef.hash60
+
 /** Invariants for the twenty-third wave (q225-q226): the hashing-trick
   * census against a JVM md5 mirror, and the bottom-k merge contract
   * against a JVM direct cut — including the property the query exists
@@ -11,12 +13,6 @@ class Training23Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  private def hash60(s: String): Long =
-    java.lang.Long.parseLong(md5Hex(s).take(15), 16)
 
   test("q225: hashing-trick census equals a JVM md5 mirror") {
     val custs = Tables(spark, dir, "customer")

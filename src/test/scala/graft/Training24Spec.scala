@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import JvmRef.{hash60, round6}
+
 /** Invariants for the twenty-fourth wave (q227-q228): containment
   * against a JVM set scan (with the asymmetry fact that motivates it),
   * and the budget-fill curve against a BigInt tier walk (with the
@@ -13,11 +15,6 @@ class Training24Spec extends SparkSpec {
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
 
   private val mask60 = (1L << 60) - 1
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  private def hash60(s: String): Long =
-    java.lang.Long.parseLong(md5Hex(s).take(15), 16)
   private def ngramHashes(text: String): Seq[Long] = {
     val wh = text.split(" ", -1).map(hash60).toSeq
     val hs =
@@ -27,8 +24,6 @@ class Training24Spec extends SparkSpec {
       else wh
     hs.distinct
   }
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("q227: containment pairs equal a JVM set scan; gate is on the smaller side") {
     val sets = Tables(spark, dir, "documents")

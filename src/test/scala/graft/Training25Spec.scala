@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import JvmRef.round6
+
 /** Invariants for the twenty-fifth wave (q229-q232): the IVF-fed twins
   * must be EXACTLY equal to their brute-force counterparts at full
   * probe (for any nlist — the identity the oracle rides on), the
@@ -14,9 +16,6 @@ class Training25Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
-
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("q229/q230 at the default confs equal their brute-force twins") {
     val a229 = q("q229_mutual_knn_ivf").collect().map(_.toSeq).toSet

@@ -1,5 +1,7 @@
 package graft
 
+import JvmRef.{hash60, round6}
+
 /** Invariants for the twenty-seventh wave (q235-q238): each query is
   * recounted in plain JVM Scala from the raw tables — same 60-bit md5
   * hash, same fold order, same rounding discipline — plus the property
@@ -10,14 +12,6 @@ class Training27Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  private def hash60(s: String): Long =
-    java.lang.Long.parseLong(md5Hex(s).take(15), 16)
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   private def docs(): Array[(Long, String, String)] =
     Tables(spark, dir, "documents")

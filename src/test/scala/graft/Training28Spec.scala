@@ -2,6 +2,8 @@ package graft
 
 import java.time.ZoneOffset
 
+import JvmRef.{hash60, round6}
+
 /** Invariants for the twenty-eighth wave (q239-q242): JVM recounts of
   * the privacy audit, the seeded DP release (+ its noise-bound
   * contract), the calibration table (+ partition totality), and the
@@ -13,14 +15,6 @@ class Training28Spec extends SparkSpec {
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
 
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  private def hash60(s: String): Long =
-    java.lang.Long.parseLong(md5Hex(s).take(15), 16)
-  private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
   private def round3(x: Double): Double =
     java.math.BigDecimal.valueOf(x)
       .setScale(3, java.math.RoundingMode.HALF_UP).doubleValue()

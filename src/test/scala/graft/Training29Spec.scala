@@ -1,5 +1,7 @@
 package graft
 
+import JvmRef.round6
+
 /** Invariants for the twenty-ninth wave (q243-q246): SQL-UDF inlining
   * (+ exact-decimal recount), FILTER-clause aggregates, k-core peeling
   * (JVM replay + monotone-shrink + degree invariants), and session
@@ -84,9 +86,6 @@ class Training29Spec extends SparkSpec {
       .select("o_orderpriority", "o_totalprice").collect()
       .map(r => (r.getString(0), r.getDouble(1)))
     val cut = os.map(o => BigDecimal(o._2).setScale(6)).sum.toDouble / os.length
-    def round6(x: Double) =
-      java.math.BigDecimal.valueOf(x)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val above = os.filter(_._2 > cut)
     val want = above.groupBy(_._1).map { case (p, rows) =>
       val s = rows.map(r => BigDecimal(r._2).setScale(6)).sum.toDouble

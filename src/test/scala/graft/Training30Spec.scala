@@ -1,5 +1,7 @@
 package graft
 
+import JvmRef.{hash60, round6}
+
 /** Invariants for the thirtieth wave (q247-q249): the IVM identity
   * (maintained aggregate == direct aggregate of the new version), the
   * cluster-aware split's zero-leakage construction (cross-checked
@@ -10,15 +12,6 @@ class Training30Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  private def hash60(s: String): Long =
-    java.lang.Long.parseLong(md5Hex(s).take(15), 16)
-  private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   test("q247: maintained aggregate equals the direct aggregate of v1 (the IVM identity)") {
     val os = Tables(spark, dir, "orders")

@@ -1,5 +1,7 @@
 package graft
 
+import JvmRef.hash60
+
 /** Invariants for the thirty-first wave (q250-q253): full JVM replays
   * of the skip-gram subsampler, the LOO target encoder, and the KMV
   * intersection estimator, plus the bucketed join's equivalence to the
@@ -10,11 +12,6 @@ class Training31Spec extends SparkSpec {
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
 
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  private def hash60(s: String): Long =
-    java.lang.Long.parseLong(md5Hex(s).take(15), 16)
   private def dsum(xs: Iterable[Double]): Double =
     xs.map(x => BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP))
       .sum.toDouble

@@ -1,5 +1,7 @@
 package graft
 
+import JvmRef.halfUp
+
 /** Invariants for the thirty-second wave (q254-q257): contract recount,
   * full JVM replays of quantile normalization, greedy k-center, and the
   * centroid label audit.
@@ -101,8 +103,6 @@ class Training32Spec extends SparkSpec {
           .map(x => math.round(x.toDouble * 1000000).toLong)
         (r.getLong(0), r.getInt(1), v)
       }
-    def halfUp(s0: Long, nn: Long): Long =
-      if (s0 < 0) -((2 * (-s0) + nn) / (2 * nn)) else (2 * s0 + nn) / (2 * nn)
     val cent = pts.groupBy(_._2).view.mapValues { rows =>
       val nn = rows.length.toLong
       Array.tabulate(64)(j => halfUp(rows.map(_._3(j)).sum, nn))

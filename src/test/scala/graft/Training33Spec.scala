@@ -1,5 +1,7 @@
 package graft
 
+import JvmRef.{halfUp, round6}
+
 /** Invariants for the thirty-third wave (q258-q261): full JVM replays of
   * the Kruskal–Wallis assembly, the integer JSD, the seasonal
   * decomposition, and the assortativity moments.
@@ -12,11 +14,6 @@ class Training33Spec extends SparkSpec {
   private def dsum(xs: Iterable[Double]): Double =
     xs.map(x => BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP))
       .sum.toDouble
-  private def halfUp(s0: Long, n: Long): Long =
-    if (s0 < 0) -((2 * (-s0) + n) / (2 * n)) else (2 * s0 + n) / (2 * n)
-  private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   test("q258: H and tie-corrected H match a JVM midrank replay; H is non-negative") {
     val rows = Tables(spark, dir, "lineitem")

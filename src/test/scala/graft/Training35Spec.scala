@@ -1,5 +1,7 @@
 package graft
 
+import JvmRef.halfUp
+
 /** Invariants for the thirty-fifth wave (q266-q269): the isotonic fit's
   * monotonicity + PAV equivalence, Shapley efficiency, Wilson interval
   * coverage facts, and the PPR seed-proximity replay.
@@ -8,9 +10,6 @@ class Training35Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
-
-  private def halfUp(s0: Long, n: Long): Long =
-    if (s0 < 0) -((2 * (-s0) + n) / (2 * n)) else (2 * s0 + n) / (2 * n)
 
   test("q266: isotonic fit is monotone, equals an iterative PAV replay, conserves pooled mass") {
     val got = q("q266_isotonic_calibration").collect()

@@ -1,5 +1,7 @@
 package graft
 
+import JvmRef.{halfUp, hash60}
+
 /** Invariants for the thirty-sixth wave (q270-q273): exact-selection +
   * coverage replay, grid-density replay + planted-blob separation, skew
   * recount, and a full backoff-chain replay that proves all three
@@ -9,14 +11,6 @@ class Training36Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  private def hash60(s: String): Long =
-    java.lang.Long.parseLong(md5Hex(s).take(15), 16)
-  private def halfUp(s0: Long, n: Long): Long =
-    if (s0 < 0) -((2 * (-s0) + n) / (2 * n)) else (2 * s0 + n) / (2 * n)
 
   test("q270: threshold is the exact k-th calibration score; coverage ~ the 90% design") {
     val os = Tables(spark, dir, "orders")

@@ -1,5 +1,7 @@
 package graft
 
+import JvmRef.halfUp
+
 /** Invariants for the thirty-seventh wave (q274-q277): a greedy replay
   * with the submodular diminishing-gain fact, temporal-leakage hygiene
   * for the feature set, the DiD identity, and recall bounds.
@@ -8,9 +10,6 @@ class Training37Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
-
-  private def halfUp(s0: Long, n: Long): Long =
-    if (s0 < 0) -((2 * (-s0) + n) / (2 * n)) else (2 * s0 + n) / (2 * n)
 
   test("q274: selection equals a JVM greedy replay; gains never increase") {
     val docs = Tables(spark, dir, "documents")

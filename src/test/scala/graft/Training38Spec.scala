@@ -1,5 +1,7 @@
 package graft
 
+import JvmRef.{halfUp, hash60}
+
 /** Invariants for the thirty-eighth wave (q278-q281): the debiasing
   * identity, fairness-metric recounts, Merkle incremental-verification
   * facts, and the LTV monotonicity + recount.
@@ -8,14 +10,6 @@ class Training38Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  private def hash60(s: String): Long =
-    java.lang.Long.parseLong(md5Hex(s).take(15), 16)
-  private def halfUp(s0: Long, n: Long): Long =
-    if (s0 < 0) -((2 * (-s0) + n) / (2 * n)) else (2 * s0 + n) / (2 * n)
 
   test("q278: debiased estimate matches the mechanism replay and brackets the truth") {
     val docs = Tables(spark, dir, "documents")

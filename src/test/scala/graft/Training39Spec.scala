@@ -1,5 +1,7 @@
 package graft
 
+import JvmRef.halfUp
+
 /** Invariants for the thirty-ninth wave (q282-q285): histogram mass
   * conservation, Markov absorption replay + monotonicity, the exact
   * decomposition identity, and the backtest recount.
@@ -8,9 +10,6 @@ class Training39Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
-
-  private def halfUp(s0: Long, n: Long): Long =
-    if (s0 < 0) -((2 * (-s0) + n) / (2 * n)) else (2 * s0 + n) / (2 * n)
 
   test("q282: joint histogram conserves mass and matches a JVM recount") {
     val rows = Tables(spark, dir, "lineitem")

@@ -1,5 +1,7 @@
 package graft
 
+import JvmRef.{halfUp, round6}
+
 /** Invariants for the forty-first wave (q290-q293): band ordering,
   * dispersion recount, mover consistency, and PR-curve monotonicity.
   */
@@ -7,9 +9,6 @@ class Training41Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
-
-  private def halfUp(s0: Long, n: Long): Long =
-    if (s0 < 0) -((2 * (-s0) + n) / (2 * n)) else (2 * s0 + n) / (2 * n)
 
   test("q290: bands are ordered p10 <= p50 <= p90 and bracket the data") {
     val got = q("q290_daily_quantile_bands").collect()
@@ -29,9 +28,6 @@ class Training41Spec extends SparkSpec {
     def dsum(xs: Iterable[Double]): Double =
       xs.map(x => BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP))
         .sum.toDouble
-    def round6(x: Double): Double =
-      java.math.BigDecimal.valueOf(x)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val want = ev.groupBy(_._1).toSeq.sortBy(_._1).map { case (tp, rs) =>
       val n = rs.size.toDouble
       val sx = dsum(rs.map(_._2))

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import JvmRef.hash60
+
 /** Invariants for the sixty-fourth wave, re-derived in the JVM with
   * independent implementations (own md5-hash60, own Lloyd's loop, own
   * rational modularity):
@@ -17,8 +19,6 @@ class Training64Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) =
     SparkEntry.allDefs.find(_.name == name).get.fn(spark, dir)
-
-  private def hash60(s: String): Long = JvmRef.hash60(s)
 
   test("q359: walks replay over a JVM adjacency with JVM md5-hash60") {
     val und = graft.operators.Graphs.doubled(

@@ -25,7 +25,7 @@ class BloomMightContainSpec extends SparkSpec {
           Seq(123456789L, -1L, Long.MaxValue, Long.MinValue, 999999999999L)
             .map(java.lang.Long.valueOf) :+ (null: java.lang.Long)
       val df = probes.toDF("h")
-        .withColumn("got", BloomMightContain.column(spark, bfB, col("h")))
+        .withColumn("got", BloomMightContain.column(bfB, col("h")))
       val rows = df.collect()
       rows.foreach { r =>
         if (r.isNullAt(0)) assert(r.isNullAt(1), "null hash must yield null")
@@ -39,15 +39,15 @@ class BloomMightContainSpec extends SparkSpec {
     } finally bfB.destroy()
   }
 
-  test("two filters active at once stay independently bound (unique registry names)") {
+  test("two filters active at once stay independently bound") {
     val bfA = spark.range(0L, 100L).toDF("id").stat.bloomFilter("id", 100L, 0.01)
     val bfBf = spark.range(5000L, 5100L).toDF("id").stat.bloomFilter("id", 100L, 0.01)
     val hA = spark.sparkContext.broadcast(bfA)
     val hB = spark.sparkContext.broadcast(bfBf)
     try {
       val df = Seq(7L, 5007L).toDF("h")
-        .withColumn("inA", BloomMightContain.column(spark, hA, col("h")))
-        .withColumn("inB", BloomMightContain.column(spark, hB, col("h")))
+        .withColumn("inA", BloomMightContain.column(hA, col("h")))
+        .withColumn("inB", BloomMightContain.column(hB, col("h")))
         .orderBy("h")
       val got = df.collect().map(r => (r.getLong(0), r.getBoolean(1), r.getBoolean(2)))
       assert(got(0)._2 === true)   // 7 ∈ A
@@ -58,5 +58,23 @@ class BloomMightContainSpec extends SparkSpec {
       assert(got(0)._3 === bfBf.mightContainLong(7L))
       assert(got(1)._2 === bfA.mightContainLong(5007L))
     } finally { hA.destroy(); hB.destroy() }
+  }
+
+  test("closingBloomPred executions leave the session's function list unchanged") {
+    // edges (i, i+1) and (i, i+2): every i ≤ 198 closes a triangle
+    val e = spark.range(0L, 200L)
+      .selectExpr("id AS u", "explode(array(id + 1, id + 2)) AS v")
+    def functions() = spark.sessionState.functionRegistry.listFunction().toSet
+    val before = functions()
+    (1 to 2).foreach { _ =>
+      val bp = graft.operators.Graphs.closingBloomPred(
+        e, 400L, col("u"), col("v"), col("e1.u"), col("e2.v"))
+      try {
+        val probed = e.as("e1").join(e.as("e2"), col("e1.v") === col("e2.u"))
+          .filter(bp.pred).count()
+        assert(probed >= 199L, "no false negatives on the closing edges")
+      } finally bp.release()
+    }
+    assert(functions() === before)
   }
 }

@@ -112,17 +112,6 @@ class WaferPipelineSpec extends SparkSpec {
     val first = withCluster.groupBy("Step_desc", "KMeans_Cluster").count()
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
     assert(again === first)
-    // sequential-fits mode (the Bench measurement knob) is result-
-    // identical: each per-step fit is independent and seed-pinned, so
-    // ordering them cannot change any assignment
-    spark.conf.set("spark.graft.wafer.concurrentFits", "false")
-    val seq = try {
-      WaferPipeline.runKMeansByStep(fixture)
-        .filter(col("KMeans_Cluster").isNotNull)
-        .groupBy("Step_desc", "KMeans_Cluster").count()
-        .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
-    } finally spark.conf.unset("spark.graft.wafer.concurrentFits")
-    assert(seq === first)
   }
 
   test("kmeans structural contract holds on the FORCED-DISTRIBUTED MLlib path too") {
